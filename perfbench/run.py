@@ -9,8 +9,9 @@ metrics are the end-to-end ones; with ``--trace 1`` the run is traced and
 the metrics are the per-layer ones. See perfbench/README.md.
 
 Everything the run writes goes under ``.perfbench/`` in the repository
-root: a per-run directory (removed at exit) and a cache of generated
-inputs and oracle references keyed by seed.
+root: a per-run directory (removed at exit) and a cache of oracle
+references and untraced operation walls, keyed by a hash of the engine
+and benchmark sources.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import time
 T_PROCESS = time.time()
 
 import argparse  # noqa: E402
+import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
@@ -35,6 +37,23 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _log(msg: str) -> None:
     """Phase timestamps on standard error, seconds since process start."""
     print(f"perfbench: +{time.time() - T_PROCESS:6.1f}s {msg}", file=sys.stderr, flush=True)
+
+
+def _source_key() -> str:
+    """Hash of every file of the engine and of the benchmark, so nothing
+    cached by other code is reused."""
+    h = hashlib.sha256()
+    files = [os.path.join(ROOT, "__spark_entry__.py")]
+    for top in ("crawler_distributed_spark", "perfbench"):
+        for dirpath, dirs, names in os.walk(os.path.join(ROOT, top)):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            files += [os.path.join(dirpath, n) for n in sorted(names)
+                      if not n.endswith(".pyc")]
+    for path in files:
+        h.update(os.path.relpath(path, ROOT).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(hashlib.sha256(f.read()).digest())
+    return h.hexdigest()[:16]
 
 
 def _parse(argv):
@@ -73,6 +92,15 @@ def _spark_conf(run_dir: str, event_log: bool) -> dict:
     conf = {
         "spark.sql.warehouse.dir": os.path.join(run_dir, "warehouse"),
         "spark.checkpoint.dir": os.path.join(run_dir, "checkpoint"),
+        # G1 (the default) grows the heap when its recent GC time share is
+        # high, so the JVM's peak RSS follows the machine's load: 1.5-2.4 GB
+        # over identical runs. The parallel collector with its sizes fixed
+        # (adaptive sizing off, the whole heap reserved, a 512 MB young
+        # generation) touches the old generation only as far as objects
+        # are promoted into it, which the run's own allocations decide.
+        "spark.driver.extraJavaOptions": (
+            f"-XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy -Xms{DRIVER_MEM} -Xmn512m"
+        ),
     }
     if event_log:
         os.makedirs(os.path.join(run_dir, "eventlog"), exist_ok=True)
@@ -111,9 +139,10 @@ def _stop(spark) -> None:
 
 
 def _untraced_walls(args, walls_path: str) -> list[float]:
-    """Operation walls of the untraced runs of this workload and seed in
-    this checkout; with none yet, make one in a child process (a JVM cannot
-    be restarted in this one: module-level UDFs keep the first gateway)."""
+    """Operation walls of the untraced runs of this workload, any seed, on
+    the same sources; with none yet, make one in a child process (a JVM
+    cannot be restarted in this one: module-level UDFs keep the first
+    gateway)."""
     from perfbench import workloads
 
     if not workloads.load_json(walls_path):
@@ -133,7 +162,7 @@ def main(argv=None) -> int:
         print(f"perfbench: no engine sources under {ROOT}", file=sys.stderr)
         return 2
     work = os.path.join(ROOT, ".perfbench")
-    cache_dir = os.path.join(work, "cache")
+    cache_dir = os.path.join(work, "cache", _source_key())
     run_dir = os.path.join(work, f"run-{os.getpid()}")
     os.makedirs(cache_dir, exist_ok=True)
     _environment(run_dir)
@@ -150,22 +179,22 @@ def main(argv=None) -> int:
 def _bench(args, cache_dir: str, run_dir: str):
     from perfbench import counters, layers, tracing, workloads
 
-    t_prep = time.time()
     wl = workloads.make(args.workload, args.seed, cache_dir, run_dir)
+    t_gen = time.time()
     wl.prepare()
-    prep_s = time.time() - t_prep
+    gen_s = time.time() - t_gen  # input generation, not part of set-up
 
     from crawler_distributed_spark import session
 
     base_conf = _spark_conf(run_dir, event_log=False)
-    walls_path = os.path.join(cache_dir, f"walls-{args.workload}-{args.seed}.json")
+    walls_path = os.path.join(cache_dir, f"walls-{args.workload}.json")
     spark = None
     try:
         if not args.trace:
             spark = session.get_spark(cpus=workloads.CPUS, extra_conf=base_conf)
-            setup_s = time.time() - T_PROCESS - prep_s
             wl.warm_up(spark)
-            _log(f"set-up {setup_s:.2f}s and warm-up done")
+            setup_s = time.time() - T_PROCESS - gen_s
+            _log(f"set-up and warm-up done in {setup_s:.2f}s")
             ops = _closed_loop(wl, spark, args.seconds)
             _log(f"{len(ops)} operation(s) done")
             workloads.save_json(walls_path, (workloads.load_json(walls_path) or [])
@@ -207,7 +236,7 @@ def _bench(args, cache_dir: str, run_dir: str):
             spark = None
             jobs, stages = tracing.read_event_log(os.path.join(run_dir, "eventlog"))
             tracing.write_spans(rec.spans, os.path.join(
-                os.path.dirname(cache_dir), "traces", f"{args.workload}-{args.seed}.jsonl"))
+                ROOT, ".perfbench", "traces", f"{args.workload}-{args.seed}.jsonl"))
             metrics = layers.per_layer(wl, rec.spans, jobs, stages, ops, mem)
             metrics["trace.overhead_share"] = ops[0].wall / statistics.median(untraced) - 1.0
             units = layers.LAYER_UNITS

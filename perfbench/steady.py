@@ -72,7 +72,7 @@ def main(argv=None) -> int:
         for m in bench["end_to_end"]:
             vals = [r["metrics"][m["name"]]["value"] for r in runs]
             med, q1, q3, sp = spread(vals)
-            within = sp <= m["bound"] or m["name"] == "setup_s"
+            within = sp <= m["bound"]
             ok &= within
             print(f"  {m['name']:<20} median {med:<12.5g} q1 {q1:<12.5g} q3 {q3:<12.5g} "
                   f"spread {sp:.4f} bound {m['bound']} ({sp / m['bound']:.2f} of bound)"
