@@ -23,6 +23,8 @@ broadcast.
 
 from __future__ import annotations
 
+from dataclasses import asdict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +36,7 @@ from ..functions.urls import (
     skipped_extension_col,
     valid_url_col,
 )
+from .seen_filter import BloomGeometry, bloom_split
 
 
 def filter_candidates(candidates: DataFrame) -> DataFrame:
@@ -191,7 +194,8 @@ def _anti_seen(probe: DataFrame, url_seen) -> DataFrame:
 
 
 def filter_unseen(
-    deduped: DataFrame, url_seen, bloom: DataFrame | None = None
+    deduped: DataFrame, url_seen, bloom: DataFrame | None = None,
+    geometry: BloomGeometry = BloomGeometry(),
 ) -> DataFrame:
     """C4: drop URLs already in the seen set.
 
@@ -199,10 +203,9 @@ def filter_unseen(
     provably novel and bypass the join entirely; only bloom hits (true
     seen + false positives) go through the exact anti-join. Without one:
     plain anti-join. ``url_seen``: DataFrame or storage.SeenParts (see
-    _anti_seen for the at-scale plan shape)."""
+    _anti_seen for the at-scale plan shape). ``geometry``: the layout
+    the bloom was built with."""
     if bloom is not None:
-        from .seen_filter import bloom_split
-
         # Materialize the tagged batch ONCE: the novel/maybe union consumes
         # it twice, and Catalyst otherwise re-evaluates the whole upstream
         # filter → canonicalize (Python) → dedup pipeline per branch — the
@@ -211,7 +214,7 @@ def filter_unseen(
         # join-key filter (guide §4.4). The lazy localCheckpoint costs one
         # O(batch) cache write and cuts the candidate pipeline to a single
         # evaluation; values are per-row pure, so output is unchanged.
-        tagged = bloom_split(deduped, bloom).localCheckpoint(eager=False)
+        tagged = bloom_split(deduped, bloom, **asdict(geometry)).localCheckpoint(eager=False)
         novel = tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = tagged.where(F.col("maybe_seen")).drop("maybe_seen")
         return novel.unionByName(_anti_seen(maybe, url_seen))
@@ -271,12 +274,14 @@ def admit(
     robots_rules: DataFrame,
     bloom: DataFrame | None = None,
     n_rows_hint: int | None = None,
+    bloom_geometry: BloomGeometry = BloomGeometry(),
 ) -> DataFrame:
     """Full admission pipeline. Output columns: crawl_id, url_norm, host,
     parent_seq, link_idx, depth, robots_ok. ``n_rows_hint``: optional
-    upper bound on the candidate count (see canonicalize_candidates)."""
+    upper bound on the candidate count (see canonicalize_candidates).
+    ``bloom_geometry``: the layout ``bloom`` was built with."""
     filtered = filter_candidates(candidates)
     canon = canonicalize_candidates(filtered, n_rows_hint=n_rows_hint)
     deduped = dedup_in_batch(canon)
-    unseen = filter_unseen(deduped, url_seen, bloom)
+    unseen = filter_unseen(deduped, url_seen, bloom, bloom_geometry)
     return gate_robots(unseen, robots_rules)

@@ -35,7 +35,7 @@ merge is a plain JVM zip_with OR over the word arrays.
 
 from __future__ import annotations
 
-from typing import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -47,6 +47,19 @@ BLOOM_SCHEMA = "bucket int, words array<long>"
 # bloom tables at or under this many bitmap bytes take the broadcast
 # JVM-probe path in bloom_split; larger ones stay bucket-cogrouped
 BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+@dataclass(frozen=True)
+class BloomGeometry:
+    """One bloom layout: bucket count, bits per bucket, probes per URL. A
+    bloom must be probed with the geometry it was built with — a probe at
+    another bucket count reads the wrong bucket's bitmap and calls seen
+    URLs novel — so one object carries it to build_bloom_delta and
+    bloom_split alike (``**asdict(geometry)``)."""
+
+    n_buckets: int = 64
+    bits_per_bucket: int = 1 << 20
+    k: int = 4
 
 
 def _bucket_col(url_col: str, n_buckets: int):

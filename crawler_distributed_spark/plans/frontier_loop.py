@@ -10,6 +10,9 @@ plan per micro-batch:
        → robots gate) → discovery_seq assignment → frontier insert
     → atomic checkpoint commit (storage.BatchStore)
 
+``CrawlLoop`` runs this one batch per ``step()`` between one ``open()``
+(init or resume) and one ``close()``; ``run_crawl`` steps it to the end.
+
 Performance shape (local[32] now, 1000 executors later):
 - Each heavy plan materializes EXACTLY ONCE per batch, as its durable
   parquet write (write-then-readback): `fetched` (materializes politeness
@@ -31,38 +34,27 @@ Performance shape (local[32] now, 1000 executors later):
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import os
 import time
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import asdict, dataclass, field
 
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-
-
-@contextlib.contextmanager
-def _timed(label: str):
-    if not _TIMING:
-        yield
-        return
-    t0 = time.time()
-    yield
-    print(f"      [{label}] {time.time() - t0:.2f}s", flush=True)
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import synth
 from ..functions.urls import canonicalize_url, host_col
-from ..operators.admission import admit, dedup_in_batch, filter_unseen, gate_robots
+from ..operators import seen_filter
+from ..operators.admission import (
+    admit, aggregate_robots_rules, dedup_in_batch, filter_unseen, gate_robots,
+)
 from ..operators.fetch import fetch_scheduled
 from ..operators.politeness import select_fetch_batch
 from ..functions.sitemaps import sitemap_score_col
 from ..operators.sequence import with_sequence
 from ..policy import (
-    ACCEPTED_CONTENT_TYPES,
-    REDIRECT_STATUSES,
-    RETRYABLE_STATUSES,
+    ACCEPTED_CONTENT_TYPES, REDIRECT_STATUSES, RETRY_POLICY, RETRYABLE_STATUSES,
     CrawlPolicy,
 )
 from ..storage import BatchStore
@@ -227,8 +219,6 @@ class CrawlRunResult:
 
 
 def _table_exists(store: BatchStore, batch_id: int, table: str) -> bool:
-    import os
-
     return os.path.isdir(store.table_path(batch_id, table))
 
 
@@ -382,226 +372,288 @@ def init_crawl(
     return frontier, int(n_queued), (int(sm["n"] or 0), int(sm["h"] or 0))
 
 
-def run_crawl(
-    spark: SparkSession,
-    cfg: synth.SynthConfig,
-    seeds: list[dict],
-    robots_rules: DataFrame,
-    checkpoint_dir: str,
-    policy: CrawlPolicy = CrawlPolicy(),
-    resume: bool = False,
-    stop_after_batch: int | None = None,
-    fetcher=None,
-) -> CrawlRunResult:
-    """Run (or resume) the crawl to completion. ``stop_after_batch`` kills
-    the loop right after committing that batch — used by the resume tests.
+def _ck_rdd(df: DataFrame | None):
+    """The JVM RDD holding a localCheckpoint-ed frame's blocks; None for
+    any other plan (a parquet read, an empty literal frame)."""
+    if df is None:
+        return None
+    plan = df._jdf.queryExecution().logical()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
 
-    ``fetcher(scheduled_df, n_rows_hint) -> DataFrame`` swaps the fetch
-    transport (default: the deterministic synthetic web; pass
-    ``operators.http_fetch.fetch_scheduled_http`` for real HTTP) — the
-    loop's politeness/admission/seen/checkpoint machinery is
-    transport-agnostic, it only needs the fetch output schema."""
-    store = BatchStore(checkpoint_dir)
-    store.rollback_uncommitted()
-    last = store.last_committed()
 
-    # Q6 per-crawl batch budget (CLOSESPIDER_TIMEOUT analog): a crawl is
-    # active at batch b iff its page budget remains, its failure cap is
-    # unreached, AND b is below its batch cap (per-seed "max_batches",
-    # else policy.max_batches_per_crawl, else unbounded)
-    _default_cap = (
-        policy.max_batches_per_crawl
-        if policy.max_batches_per_crawl is not None
-        else (1 << 30)
-    )
+def _unpersist(df: DataFrame | None) -> None:
+    rdd = _ck_rdd(df)
+    if rdd is not None:
+        # the SparkContext call, not RDD.unpersist: that one logs a warning
+        # per locally checkpointed RDD, i.e. several every batch
+        rdd.context().unpersistRDD(rdd.id(), False)
 
-    def _active_pred(b: int):
+
+@dataclass
+class BatchReport:
+    """One executed batch, as ``CrawlLoop.step`` returns it."""
+
+    batch: int
+    seconds: float
+
+
+@dataclass
+class LoopState:
+    """What one batch hands the next. The frames are localCheckpoints; a
+    background pool overlaps the journal write and the budget/strategy/
+    bloom checkpoints with the critical path (under AQE even a lazy
+    localCheckpoint runs its shuffle stages at the call, ~1 s each). Each
+    future resolves before its first consumer, the journal before every
+    manifest commit, so ordering and the commit protocol are a sequential
+    loop's. Superseded checkpoints are unpersisted once nothing can read
+    them (``release``): cached blocks stay flat while the loop is open."""
+
+    frontier: DataFrame
+    budget: DataFrame           # per-crawl pages/failed/max_pages/max_batches
+    strat: DataFrame            # P6 per (crawl, host) all-fail batch count
+    bloom: DataFrame | None     # partitioned bloom over the seen set
+    host_lat: DataFrame | None  # P2 per-host latency EWMA (autothrottle)
+    robots_agg: DataFrame
+    crawls: DataFrame
+    geometry: seen_filter.BloomGeometry  # the bloom's build AND probe layout
+    next_seq: int
+    batch: int                  # the next batch to run
+    last_committed: int
+    acc: dict | None            # CrawlRunResult.out_hashes accumulators
+    # (elig, next_nb) of `batch`, carried by the frontier checkpoint's
+    # Observation; None -> recount (fresh open, resume, gap jump)
+    pending: tuple | None = None
+    pool: ThreadPoolExecutor = field(default_factory=lambda: ThreadPoolExecutor(4))
+    futures: dict = field(default_factory=dict)
+    retired: list = field(default_factory=list)  # (old, successor) pairs
+
+    def submit(self, name: str, fn, *args) -> None:
+        self.futures[name] = self.pool.submit(fn, *args)
+
+    def resolve(self, name: str) -> None:
+        """Join background job ``name``; a frame it returns replaces the
+        state field of that name."""
+        fut = self.futures.pop(name, None)
+        new = fut.result() if fut is not None else None
+        if new is not None:
+            self.replace(name, new)
+
+    def replace(self, name: str, new: DataFrame) -> None:
+        self.retired.append((getattr(self, name), new))
+        setattr(self, name, new)
+
+    def release(self) -> None:
+        """Unpersist each retired checkpoint whose successor is
+        checkpointed or fully cached: no job can recompute through the old
+        blocks any more. Callers make sure no journal write is in flight
+        (it reads the previous frontier's blocks)."""
+        sc = self.frontier.sparkSession.sparkContext
+        cached = {i.id(): i.numCachedPartitions() for i in sc._jsc.sc().getRDDStorageInfo()}
+        keep = []
+        for old, new in self.retired:
+            rdd = _ck_rdd(new)
+            if rdd is not None and (rdd.isCheckpointed() or
+                                    cached.get(rdd.id(), 0) == rdd.getNumPartitions()):
+                _unpersist(old)
+            else:
+                keep.append((old, new))
+        self.retired = keep
+
+    def close(self) -> None:
+        """Wait for every background job, stop the pool and unpersist
+        everything the loop cached."""
+        self.pool.shutdown(wait=True)
+        for df in (self.frontier, self.budget, self.strat, self.bloom,
+                   self.host_lat, *(old for old, _ in self.retired)):
+            _unpersist(df)
+        self.robots_agg.unpersist()
+        self.crawls.unpersist()
+
+
+class CrawlLoop:
+    """The frontier loop, one batch per ``step()``.
+
+    ``open()`` initializes a fresh checkpoint or resumes its last
+    committed batch, once. ``step()`` runs the next batch and commits it
+    when it is durable. ``close()`` makes the final commit, joins the
+    background pool and re-raises any failure of it. As a context manager
+    the loop closes on every exit, and commits only when the body did not
+    raise. Arguments are ``run_crawl``'s."""
+
+    def __init__(
+        self, spark: SparkSession, cfg: synth.SynthConfig, seeds: list[dict],
+        robots_rules: DataFrame, checkpoint_dir: str,
+        policy: CrawlPolicy = CrawlPolicy(), resume: bool = False,
+        stop_after_batch: int | None = None, fetcher=None,
+    ):
+        self.spark, self.cfg, self.seeds = spark, cfg, seeds
+        self.robots_rules, self.policy = robots_rules, policy
+        self.resume, self.stop_after_batch = resume, stop_after_batch
+        self.fetch = fetcher or (lambda s, hint: fetch_scheduled(s, cfg, n_rows_hint=hint))
+        self.store = BatchStore(checkpoint_dir)
+        # Q6 per-crawl batch budget (CLOSESPIDER_TIMEOUT analog): per-seed
+        # "max_batches", else policy.max_batches_per_crawl, else unbounded
+        cap = policy.max_batches_per_crawl
+        self.default_cap = (1 << 30) if cap is None else cap
+        self.state: LoopState | None = None
+        self.batch_seconds: list = []
+        self.done = False      # no batch left to run
+        self.drained = False   # ... because the crawl ran to its end
+
+    def __enter__(self) -> "CrawlLoop":
+        return self.open()
+
+    def __exit__(self, exc_type, *_) -> None:
+        self.close(ok=exc_type is None)
+
+    def _active(self, b: int):
+        """A crawl is active at batch b iff its page budget remains, its
+        failure cap is unreached, and b is below its batch cap."""
         return (
             (F.col("pages") < F.col("max_pages"))
-            & (F.col("failed") < F.lit(policy.max_failed_pages))
-            & (F.lit(b) < F.coalesce(F.col("max_batches"), F.lit(_default_cap)))
+            & (F.col("failed") < F.lit(self.policy.max_failed_pages))
+            & (F.lit(b) < F.coalesce(F.col("max_batches"), F.lit(self.default_cap)))
         )
 
-    # output-hash accumulators (see CrawlRunResult.out_hashes): valid only
-    # for fresh runs — a resume cannot cheaply reconstruct the prior
-    # batches' contributions without the full scan it exists to avoid
-    acc: dict | None = None
-    if not resume or last is None:
-        if last is not None:
-            raise ValueError(
-                f"checkpoint {checkpoint_dir} already has state; pass resume=True"
-            )
-        with _timed("init_crawl"):
+    def open(self) -> "CrawlLoop":
+        spark, store, pol = self.spark, self.store, self.policy
+        store.rollback_uncommitted()
+        last = store.last_committed()
+        geometry = seen_filter.BloomGeometry(n_buckets=pol.bloom_buckets)
+        acc = bloom = None
+        if not self.resume or last is None:
+            if last is not None:
+                raise ValueError(f"checkpoint {store.root} already has state; pass resume=True")
             frontier, next_seq, (seed_n, seed_h) = init_crawl(
-                spark, seeds, robots_rules, store,
-                seq_singlepart_threshold=policy.seq_singlepart_threshold,
+                spark, self.seeds, self.robots_rules, store,
+                seq_singlepart_threshold=pol.seq_singlepart_threshold,
             )
-        acc = {
-            "trace_rows": 0, "trace_hash": 0,
-            "seen_rows": seed_n, "seen_hash": seed_h,
-        }
-        last = -1
-    else:
-        manifest = store.read_manifest(last)
-        next_seq = manifest["next_seq"]
-        frontier = store.read_frontier(spark, last, _FRONTIER_COLS)
-        # delta replay records schedules/additions, not finished-crawl
-        # purges; apply the purge once with the committed budget (budgets
-        # are monotone — a finished crawl never un-finishes, so purging
-        # at resume equals purging every batch)
-        _active = (
-            store.read_table(spark, last, "budget")
-            .where(_active_pred(last + 1))
-            .select("crawl_id")
+            # output-hash accumulators (see CrawlRunResult.out_hashes): a
+            # resume cannot cheaply reconstruct the prior batches' share
+            acc = {"trace_rows": 0, "trace_hash": 0, "seen_rows": seed_n, "seen_hash": seed_h}
+            last = -1
+        else:
+            next_seq = store.read_manifest(last)["next_seq"]
+            # delta replay records schedules/additions, not finished-crawl
+            # purges; apply the purge once with the committed budget
+            # (budgets are monotone — a finished crawl never un-finishes,
+            # so purging at resume equals purging every batch)
+            active = store.read_table(spark, last, "budget").where(
+                self._active(last + 1)).select("crawl_id")
+            frontier = store.read_frontier(spark, last, _FRONTIER_COLS).join(
+                F.broadcast(active), "crawl_id", "left_semi"
+            )
+            if pol.use_bloom:
+                # the bloom over the whole seen set (north rule); a fresh
+                # run has none yet and folds its seeds into batch 0's delta
+                bloom = seen_filter.build_bloom_delta(
+                    store.read_seen(spark, last).select("url_norm"),
+                    **asdict(geometry),
+                ).localCheckpoint()
+        robots_agg = aggregate_robots_rules(self.robots_rules).cache()
+        robots_agg.count()
+        host_lat = None
+        if pol.autothrottle:
+            host_lat = (
+                store.read_table(spark, last, "hostlat")
+                if _table_exists(store, last, "hostlat")
+                else spark.createDataFrame([], "host string, ewma double, last_b long")
+            )
+        # P6 escalation: strategy level = min(2, fail_batches) (direct ->
+        # proxy -> render, base_spider.py:151-244 made batch-deterministic)
+        strat = (
+            store.read_table(spark, last, "strategy")
+            if _table_exists(store, last, "strategy")
+            else spark.createDataFrame([], "crawl_id string, host string, fail_batches int")
         )
-        frontier = frontier.join(F.broadcast(_active), "crawl_id", "left_semi")
-
-    crawls = _crawl_dim(spark, seeds).cache()
-    # per-crawl budget lives as a Spark state table, not a driver dict —
-    # every O(#crawls) driver loop/collect would serialize the batch at
-    # 10^5+ crawls (and 10^7 on a real cluster)
-    budget_state = store.read_table(spark, last, "budget").localCheckpoint()
-    # loop-invariant dimension: aggregate + cache the robots rules once
-    from ..operators.admission import aggregate_robots_rules
-    from ..operators.seen_filter import build_bloom_delta, merge_blooms
-
-    robots_agg = aggregate_robots_rules(robots_rules).cache()
-    robots_agg.count()
-
-    # partitioned bloom filter over the seen set (north rule): rebuilt from
-    # the admitted deltas on start/resume, OR-merged with each batch's delta
-    # P2 autothrottle state: per-host EWMA of fetch latency_class
-    host_lat = (
-        store.read_table(spark, last, "hostlat")
-        if policy.autothrottle and _table_exists(store, last, "hostlat")
-        else (
-            spark.createDataFrame([], "host string, ewma double, last_b long")
-            if policy.autothrottle
-            else None
+        self.state = LoopState(
+            # budget: a Spark state table, not a driver dict — every O(#crawls)
+            # driver loop/collect would serialize the batch at 10^5+ crawls
+            frontier=frontier, budget=store.read_table(spark, last, "budget").localCheckpoint(),
+            strat=strat.localCheckpoint(), bloom=bloom, host_lat=host_lat,
+            robots_agg=robots_agg, crawls=_crawl_dim(spark, self.seeds).cache(),
+            geometry=geometry, next_seq=next_seq, batch=last + 1, last_committed=last, acc=acc,
         )
-    )
+        return self
 
-    # P6 escalation state: per (crawl, host) count of all-fail batches;
-    # strategy level = min(2, fail_batches) (direct -> proxy -> render,
-    # base_spider.py:151-244 made batch-deterministic)
-    strat_state = (
-        store.read_table(spark, last, "strategy")
-        if _table_exists(store, last, "strategy")
-        else spark.createDataFrame([], "crawl_id string, host string, fail_batches int")
-    ).localCheckpoint()
+    def _grow_bloom(self, bloom: DataFrame | None, urls: DataFrame) -> DataFrame:
+        delta = seen_filter.build_bloom_delta(urls, **asdict(self.state.geometry))
+        return seen_filter.merge_blooms(bloom, delta).localCheckpoint(eager=False)
 
-    bloom = None
-    if policy.use_bloom:
-        seen_all = store.read_seen(spark, last)
-        bloom = build_bloom_delta(
-            seen_all.select("url_norm"), n_buckets=policy.bloom_buckets
-        ).localCheckpoint()
+    def _commit(self, batch: int, snapshot: bool) -> None:
+        """Write the state tables, then the manifest that commits
+        ``batch`` (the journal is joined first: it must precede it)."""
+        st, store = self.state, self.store
+        st.resolve("budget")
+        st.resolve("strat")
+        if snapshot:
+            store.write_table(st.frontier, batch, "frontier")
+        store.write_table(st.budget, batch, "budget")
+        store.write_table(st.strat, batch, "strategy")
+        if self.policy.autothrottle:
+            store.write_table(st.host_lat, batch, "hostlat")
+        st.resolve("journal")
+        store.commit(batch, {"next_seq": st.next_seq})
+        st.last_committed = batch
 
-    def _maybe_ck(df: DataFrame, b: int) -> DataFrame:
-        """LAZY localCheckpoint for the small state frames: the first
-        consumer's job materializes it (no dedicated driver job), every
-        later consumer in the batch reads the cached blocks, and lineage
-        is truncated so chains never deepen across batches."""
-        return df.localCheckpoint(eager=False)
-
-    batch = last + 1
-    last_committed = last
-    batch_seconds: list = []
-    # Background pool overlapping independent per-batch jobs with the
-    # critical path (guide §2.6: actions are only sequential because the
-    # driver calls them sequentially): the journal write plus the small
-    # state-table checkpoints (budget/strategy/bloom). Under AQE a "lazy"
-    # localCheckpoint materializes its shuffle stages eagerly, so each of
-    # these otherwise blocks the driver ~1 s per batch back-to-back.
-    # Every future is resolved (`_resolve`) strictly before its first
-    # consumer, so ordering semantics are unchanged; the journal future
-    # is additionally flushed ahead of every manifest commit, keeping the
-    # commit protocol intact (a journal is always durable before the
-    # manifest that covers it; anything newer than the last manifest is
-    # rolled back on resume).
-    from concurrent.futures import ThreadPoolExecutor
-
-    _journal_pool = ThreadPoolExecutor(max_workers=4)
-    _journal_state: dict = {"fut": None}
-    _pend: dict = {}
-
-    def _submit_ck(name: str, df: DataFrame) -> None:
-        _pend[name] = _journal_pool.submit(df.localCheckpoint, False)
-
-    def _resolve(name: str, current):
-        fut = _pend.pop(name, None)
-        return fut.result() if fut is not None else current
-
-    def _flush_journal() -> None:
-        fut = _journal_state.get("fut")
-        if fut is not None:
-            _journal_state["fut"] = None
-            fut.result()
-    # eligibility for the NEXT batch rides the frontier checkpoint as an
-    # Observation (no dedicated count job); None -> bootstrap/jump recount
-    pending: tuple | None = None
-    while batch < policy.max_batches:
-        _bt0 = time.time()
-        # budgets carries max_pages too: the fetch stage needs it for the
-        # sitemap-index early break (domain_spider.py:326-354), and budget
-        # state already holds it — carrying it here saves a second
-        # per-batch O(#crawls) broadcast build (the former crawls-dim join)
-        budgets = budget_state.where(_active_pred(batch)).select(
-            "crawl_id",
-            (F.col("max_pages") - F.col("pages")).alias("remaining"),
-            "max_pages",
-        )
-
-        avail = frontier.join(F.broadcast(budgets), "crawl_id")
-        if pending is None:
-            with _timed("counts"):
+    def step(self) -> BatchReport | None:
+        """Run the next batch — jumping an idle backoff gap first — and
+        commit it when it is durable. None once no batch is left."""
+        if self.done:
+            return None
+        st, pol, store, spark = self.state, self.policy, self.store, self.spark
+        while True:
+            t0 = time.time()
+            if st.batch >= pol.max_batches:
+                self.done = self.drained = True
+                return None
+            # max_pages rides the budgets broadcast: the fetch stage needs
+            # it for the sitemap-index early break (domain_spider.py:326-354)
+            budgets = st.budget.where(self._active(st.batch)).select(
+                "crawl_id", (F.col("max_pages") - F.col("pages")).alias("remaining"), "max_pages"
+            )
+            avail = st.frontier.join(F.broadcast(budgets), "crawl_id")
+            if st.pending is None:
                 counts = avail.agg(
-                    F.sum((F.col("not_before_batch") <= batch).cast("long")).alias("elig"),
+                    F.sum((F.col("not_before_batch") <= st.batch).cast("long")).alias("elig"),
                     F.min(
-                        F.when(F.col("not_before_batch") > batch, F.col("not_before_batch"))
+                        F.when(F.col("not_before_batch") > st.batch, F.col("not_before_batch"))
                     ).alias("next_nb"),
                 ).collect()[0]
-            n_elig, next_nb = counts["elig"] or 0, counts["next_nb"]
-        else:
-            n_elig, next_nb = pending
-        if n_elig == 0:
-            if next_nb is not None:
-                # jump the idle backoff gap in one step; nothing observable
-                # happens in between, so batch numbering stays oracle-equal
-                batch = int(next_nb)
-                pending = None  # recount at the jump target
-                continue
-            break
+                st.pending = (counts["elig"] or 0, counts["next_nb"])
+            n_elig, next_nb = st.pending
+            if n_elig:
+                break
+            if next_nb is None:
+                self.done = self.drained = True
+                return None
+            # jump the idle backoff gap in one step; nothing observable
+            # happens in between, so batch numbering stays oracle-equal
+            st.batch, st.pending = int(next_nb), None
+        batch = st.batch
 
-        eligible = avail.where(F.col("not_before_batch") <= batch).drop(
-            "remaining", "max_pages"
-        )
+        eligible = avail.where(F.col("not_before_batch") <= batch).drop("remaining", "max_pages")
         host_quotas = None
-        if policy.autothrottle:
-            host_quotas = host_lat.select(
+        if pol.autothrottle:
+            host_quotas = st.host_lat.select(
                 "host",
                 F.greatest(
                     F.lit(1),
-                    F.floor(F.lit(policy.quota_per_host) / (F.lit(1.0) + F.col("ewma"))).cast("int"),
+                    F.floor(F.lit(pol.quota_per_host) / (F.lit(1.0) + F.col("ewma"))).cast("int"),
                 ).alias("quota_h"),
             )
         scheduled = select_fetch_batch(
-            eligible, budgets, policy, n_eligible=n_elig, host_quotas=host_quotas,
-            # domain scoping (F4) admits exactly 2 hosts per crawl
-            # (_crawl_dim), so the per-crawl politeness window input is
-            # structurally <= 2*quota rows — the window path stays exact
-            # AND embedded at any frontier size
+            eligible, budgets, pol, n_eligible=n_elig, host_quotas=host_quotas,
+            # domain scoping (F4) admits exactly 2 hosts per crawl, so the
+            # per-crawl window input is <= 2*quota rows at any frontier size
             hosts_per_crawl_bound=2,
         )
-        # (max_pages rides the budgets broadcast — scheduled already has it)
         # P6: effective strategy = host escalation level ∨ per-URL 403
-        # force-proxy carried on the frontier row (retry_middleware.py:33-55)
-        # strat_state is O(#crawls × hosts-per-crawl) like the budgets dim
-        # (already broadcast by design); an explicit broadcast stops the
-        # planner from SMJ-ing the batch against a stats-less RDD scan
-        strat_state = _resolve("strat", strat_state)
+        # force-proxy (retry_middleware.py:33-55); the explicit broadcast
+        # stops the planner from SMJ-ing the batch against an RDD scan
+        st.resolve("strat")
         scheduled = scheduled.join(
-            F.broadcast(strat_state), ["crawl_id", "host"], "left"
+            F.broadcast(st.strat), ["crawl_id", "host"], "left"
         ).withColumn(
             "strategy_level",
             F.greatest(
@@ -612,99 +664,62 @@ def run_crawl(
 
         # materialization #1: politeness + fetch, straight into parquet.
         # n_rows_hint caps the Arrow-stage partition count by the batch's
-        # row count: fat waves keep full parallelism, thin tail waves stop
-        # paying (shuffle.partitions − needed) empty python tasks per job —
-        # a pure per-batch-floor cut (partitioning never affects values).
-        with _timed("fetch+schedule write"):
-            _fetch = fetcher or (
-                lambda s, hint: fetch_scheduled(s, cfg, n_rows_hint=hint)
-            )
-            # the run's trace hash rides this write as an Observation —
-            # XOR-accumulated per batch, it equals the end-of-run
-            # full-trace bit_xor scan bit-for-bit (associativity), so
-            # callers like scripts/scaling_run.py need no final
-            # O(total-urls) aggregation job at all (VERDICT r4 #1)
-            tr_obs = Observation(f"trace-{batch}")
-            store.write_table(
-                _fetch(scheduled, n_elig).withColumn(
-                    "batch_id", F.lit(batch).cast("long")
-                ).observe(
-                    tr_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.expr(
-                        "bit_xor(xxhash64("
-                        "crawl_id, batch_id, seq_in_batch, url_norm, depth))"
-                    ).alias("h"),
-                ),
-                batch,
-                "fetched",
-            )
-            if acc is not None:
-                tm = tr_obs.get
-                acc["trace_rows"] += int(tm["n"] or 0)
-                acc["trace_hash"] ^= int(tm["h"] or 0)
+        # row count (thin waves skip empty python tasks; values never
+        # depend on partitioning). The trace hash rides the write as an
+        # Observation: XOR-accumulated per batch it equals the full-trace
+        # bit_xor scan, so callers need no final aggregation job
+        tr_obs = Observation(f"trace-{batch}")
+        store.write_table(
+            self.fetch(scheduled, n_elig).withColumn("batch_id", F.lit(batch).cast("long")).observe(
+                tr_obs, F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(crawl_id, batch_id, seq_in_batch, url_norm, depth))").alias("h"),
+            ),
+            batch, "fetched",
+        )
+        if st.acc is not None:
+            tm = tr_obs.get
+            st.acc["trace_rows"] += int(tm["n"] or 0)
+            st.acc["trace_hash"] ^= int(tm["h"] or 0)
         fetched = store.read_table(spark, batch, "fetched")
 
-        # ONE aggregation pass over the fetched read for both budget
-        # deltas (pages) and fail deltas (r3 #3: every separate
-        # post-fetch agg is a per-batch fixed cost the thin tail pays)
-        page_pred = (
-            F.lit(True) if policy.count_scheduled_in_budget else _is_page()
-        )
+        # ONE aggregation pass for the budget (pages) and fail deltas: each
+        # separate post-fetch agg is a fixed cost the thin tail pays
+        page_pred = F.lit(True) if pol.count_scheduled_in_budget else _is_page()
         deltas = fetched.groupBy("crawl_id").agg(
             F.sum(page_pred.cast("long")).alias("_n"),
             F.sum((F.col("status") >= 400).cast("long")).alias("_f"),
         )
-        with _timed("budget update"):
-            budget_state = (
-                budget_state.join(deltas, "crawl_id", "left")
-                .select(
-                    "crawl_id",
-                    (F.col("pages") + F.coalesce(F.col("_n"), F.lit(0)))
-                    .cast("int")
-                    .alias("pages"),
-                    (F.col("failed") + F.coalesce(F.col("_f"), F.lit(0)))
-                    .cast("int")
-                    .alias("failed"),
-                    "max_pages",
-                    "max_batches",
-                )
-            )
-            # checkpoint in the background; resolved before active_df below
-            _submit_ck("budget", budget_state)
+        budget = st.budget.join(deltas, "crawl_id", "left").select(
+            "crawl_id",
+            (F.col("pages") + F.coalesce(F.col("_n"), F.lit(0))).cast("int").alias("pages"),
+            (F.col("failed") + F.coalesce(F.col("_f"), F.lit(0))).cast("int").alias("failed"),
+            "max_pages", "max_batches",
+        )
+        # checkpointed in the background; resolved before active_df below
+        st.submit("budget", budget.localCheckpoint, False)
         # P6: hosts whose every fetch this batch failed escalate one level
         host_fail = fetched.groupBy("crawl_id", "host").agg(
             (F.max(F.when(F.col("status") < 400, 1).otherwise(0)) == 0).alias("_allfail")
         )
-        strat_state = (
-            strat_state.join(host_fail, ["crawl_id", "host"], "full")
-            .select(
-                "crawl_id",
-                "host",
-                (
-                    F.coalesce(F.col("fail_batches"), F.lit(0))
-                    + F.when(F.coalesce(F.col("_allfail"), F.lit(False)), 1).otherwise(0)
-                )
-                .cast("int")
-                .alias("fail_batches"),
-            )
+        strat = st.strat.join(host_fail, ["crawl_id", "host"], "full").select(
+            "crawl_id", "host",
+            (F.coalesce(F.col("fail_batches"), F.lit(0))
+             + F.when(F.coalesce(F.col("_allfail"), F.lit(False)), 1).otherwise(0)
+             ).cast("int").alias("fail_batches"),
         )
-        # checkpoint in the background; resolved before next batch's
-        # scheduled join (and before any durable write this batch)
-        _submit_ck("strat", strat_state)
+        # checkpointed in the background; resolved before the next batch's
+        # scheduled join (or this batch's durable write)
+        st.submit("strat", strat.localCheckpoint, False)
 
         # --- retries (Q7/P8: per-status multiplier + per-status retry cap,
         # backoff in batches, bury past the cap — retry_middleware.py:33-55)
-        _plan_t0 = time.time()
-        from ..policy import RETRY_POLICY
-
         retryable = F.col("status").isin(_RETRYABLE_LIST)
         mult = F.lit(1.0)
         max_r = F.lit(0)
         for st_code, (m, r) in RETRY_POLICY.items():
             mult = F.when(F.col("status") == st_code, F.lit(m)).otherwise(mult)
             max_r = F.when(
-                F.col("status") == st_code, F.lit(min(r, policy.max_attempts))
+                F.col("status") == st_code, F.lit(min(r, pol.max_attempts))
             ).otherwise(max_r)
         retries = (
             fetched.where(retryable & (F.col("attempts") < max_r))
@@ -714,16 +729,12 @@ def run_crawl(
                 F.lit(batch)
                 + F.least(
                     F.ceil(mult * F.pow(F.lit(2.0), F.col("attempts"))),
-                    F.lit(policy.backoff_cap).cast("long"),
+                    F.lit(pol.backoff_cap).cast("long"),
                 ),
             )
             # 403 retries force the proxy strategy (retry_middleware.py:33-55)
-            .withColumn(
-                "forced_strategy",
-                F.when(F.col("status") == 403, F.lit(1)).otherwise(
-                    F.col("forced_strategy")
-                ),
-            )
+            .withColumn("forced_strategy", F.when(F.col("status") == 403, F.lit(1))
+                        .otherwise(F.col("forced_strategy")))
             .select(*_FRONTIER_COLS)
         )
 
@@ -737,18 +748,13 @@ def run_crawl(
         redirected = fetched.where(
             F.col("status").isin(_REDIRECT_LIST) & (F.size("outlinks") > 0)
         ).select(
-            "crawl_id",
-            F.col("discovery_seq").alias("parent_seq"),
-            F.col("depth"),
-            F.lit(0).alias("link_idx"),
-            F.col("outlinks").getItem(0).alias("raw_url"),
+            "crawl_id", F.col("discovery_seq").alias("parent_seq"), F.col("depth"),
+            F.lit(0).alias("link_idx"), F.col("outlinks").getItem(0).alias("raw_url"),
             F.lit(0.0).alias("priority_score"),
         )
         # S6/Q3/Q4: sitemap-discovered URLs — scored (frozen clock), ranked
         # by score, truncated to the crawl's max_pages (sitemap_utils.py:
         # 374-433), admitted with the score as priority_score
-        from pyspark.sql import Window as _W
-
         sm = (
             fetched.where(F.size("sitemap_entries") > 0)
             .select(
@@ -764,18 +770,12 @@ def run_crawl(
                 "priority_score",
                 sitemap_score_col(
                     F.col("e.priority"), F.col("e.lastmod"), F.col("e.changefreq"),
-                    F.lit(policy.sitemap_now_date).cast("date"),
+                    F.lit(pol.sitemap_now_date).cast("date"),
                 ),
             )
-            .withColumn(
-                "link_idx",
-                F.row_number().over(
-                    _W.partitionBy("crawl_id", "parent_seq").orderBy(
-                        F.desc("priority_score"), F.asc("e.url")
-                    )
-                )
-                - 1,
-            )
+            .withColumn("link_idx", F.row_number().over(
+                Window.partitionBy("crawl_id", "parent_seq")
+                .orderBy(F.desc("priority_score"), F.asc("e.url"))) - 1)
             .where(F.col("link_idx") < F.col("max_pages"))
             .select(
                 "crawl_id", "parent_seq", "depth", "link_idx",
@@ -796,16 +796,13 @@ def run_crawl(
             )
             .withColumn("priority_score", F.lit(0.0))
         )
-        # active-crawl restriction + F4 scoping dim, as ONE broadcast: the
+        # active-crawl restriction + F4 scoping dim as ONE broadcast: the
         # allowed-hosts dim semi-filtered by the active budget set (an
-        # isin() literal list would break the plan at 10^4+ crawls; two
-        # separate broadcasts were two O(#crawls) per-batch build jobs —
-        # the inner join against the pre-filtered dim is equivalent)
-        budget_state = _resolve("budget", budget_state)
-        active_df = budget_state.where(_active_pred(batch)).select("crawl_id")
-        cand_dim = crawls.select(
-            "crawl_id", "allowed_host_1", "allowed_host_2"
-        ).join(active_df, "crawl_id", "left_semi")
+        # isin() list breaks the plan at 10^4+ crawls)
+        st.resolve("budget")
+        active_df = st.budget.where(self._active(batch)).select("crawl_id")
+        cand_dim = st.crawls.select("crawl_id", "allowed_host_1", "allowed_host_2").join(
+            active_df, "crawl_id", "left_semi")
         candidates = (
             parsed.unionByName(redirected).unionByName(sm)
             .withColumn("is_control", F.lit(False))
@@ -813,9 +810,6 @@ def run_crawl(
             .join(F.broadcast(cand_dim), "crawl_id")
         )
 
-        if _TIMING:
-            print(f"      [candidates build] {time.time() - _plan_t0:.2f}s",
-                  flush=True)
         # the seen set, split for the anti-join (storage.read_seen_parts):
         # the bucketed compacted copy scans with NO exchange on its side,
         # deltas ride as a small second anti-join; the periodic compaction
@@ -829,56 +823,42 @@ def run_crawl(
         # than the anti-join they shave, so thin batches skip it. The
         # admitted row count rides the write as an Observation (no extra
         # job) and gates the bloom delta build below.
-        bloom = _resolve("bloom", bloom)
-        use_split = bloom is not None and n_elig >= policy.bloom_split_min
+        st.resolve("bloom")
+        use_split = st.bloom is not None and n_elig >= pol.bloom_split_min
         admitted = admit(
-            candidates,
-            seen,
-            robots_agg,
-            bloom=bloom if use_split else None,
-            n_rows_hint=n_elig * max(1, cfg.branching),
+            candidates, seen, st.robots_agg, bloom=st.bloom if use_split else None,
+            n_rows_hint=n_elig * max(1, self.cfg.branching), bloom_geometry=st.geometry,
         )
         adm_obs = Observation(f"adm-{batch}")
-        with _timed("admission write"):
-            store.write_table(
-                _admitted_wide(admitted, batch).observe(
-                    adm_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    # seen-set hash contribution (see tr_obs above)
-                    F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
-                ),
-                batch,
-                "admitted",
-            )
+        store.write_table(
+            _admitted_wide(admitted, batch).observe(  # + seen-set hash (see tr_obs)
+                adm_obs, F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
+            ),
+            batch, "admitted",
+        )
         am = adm_obs.get
         n_admitted_rows = int(am["n"] or 0)
-        if acc is not None:
-            acc["seen_rows"] += n_admitted_rows
-            acc["seen_hash"] ^= int(am["h"] or 0)
+        if st.acc is not None:
+            st.acc["seen_rows"] += n_admitted_rows
+            st.acc["seen_hash"] ^= int(am["h"] or 0)
         admitted_r = store.read_table(spark, batch, "admitted")
 
         robots_ok_rows = admitted_r.where("robots_ok")
-        if n_elig <= policy.seq_singlepart_threshold:
+        if n_elig <= pol.seq_singlepart_threshold:
             # small batch: one global window stamps consecutive seqs (a
             # single sort of bounded size, embedded in the frontier job —
             # no range-sample / materialize / count jobs); the admitted
             # count is recovered from the frontier Observation below
             # (rows with seq >= next_seq are exactly this batch's)
-            from pyspark.sql import Window as _WS
-
-            queued_new = robots_ok_rows.withColumn(
-                "discovery_seq",
-                (
-                    F.row_number().over(_WS.orderBy("parent_seq", "link_idx"))
-                    + F.lit(next_seq - 1)
-                ).cast("long"),
-            )
+            queued_new = robots_ok_rows.withColumn("discovery_seq", (
+                F.row_number().over(Window.orderBy("parent_seq", "link_idx"))
+                + F.lit(st.next_seq - 1)).cast("long"))
             n_admitted = None
         else:
-            with _timed("with_sequence count"):
-                queued_new, n_admitted = with_sequence(
-                    robots_ok_rows, ["parent_seq", "link_idx"], start=next_seq
-                )
+            queued_new, n_admitted = with_sequence(
+                robots_ok_rows, ["parent_seq", "link_idx"], start=st.next_seq
+            )
 
         # materialization #3: next frontier state (kept hot for the next
         # iteration; parquet-persisted on durable batches). The rebuild
@@ -886,227 +866,185 @@ def run_crawl(
         # un-finish, so those rows can never be scheduled again) and
         # carries the NEXT batch's eligibility aggregates as an
         # Observation — the per-batch count job folds into this one.
-        next_active = budget_state.where(_active_pred(batch + 1)).select("crawl_id")
+        next_active = st.budget.where(self._active(batch + 1)).select("crawl_id")
         elig_obs = Observation(f"elig-{batch}")
-        with _timed("frontier checkpoint"):
-            frontier = (
-                # scheduled seqs come from the MATERIALIZED fetched table
-                # (1:1 with the scheduled rows) — re-deriving them from
-                # the lazy `scheduled` plan would recompute the whole
-                # politeness stage inside this job
-                frontier.join(fetched.select("discovery_seq"), "discovery_seq", "left_anti")
-                .select(*_FRONTIER_COLS)
-                .unionByName(retries)
-                .unionByName(_finish_frontier_rows(queued_new))
-                .join(F.broadcast(next_active), "crawl_id", "left_semi")
-                .observe(
-                    elig_obs,
-                    F.sum(
-                        (F.col("not_before_batch") <= batch + 1).cast("long")
-                    ).alias("elig"),
-                    F.min(
-                        F.when(
-                            F.col("not_before_batch") > batch + 1,
-                            F.col("not_before_batch"),
-                        )
-                    ).alias("next_nb"),
-                    # this batch's admissions: old rows and retries all carry
-                    # seq < next_seq; the purge cannot drop new rows because
-                    # admission already ran behind the identical active set
-                    F.sum(
-                        (F.col("discovery_seq") >= F.lit(next_seq)).cast("long")
-                    ).alias("n_new"),
-                )
-            ).localCheckpoint()
+        frontier = (
+            # scheduled seqs come from the MATERIALIZED fetched table
+            # (1:1 with the scheduled rows) — re-deriving them from
+            # the lazy `scheduled` plan would recompute the whole
+            # politeness stage inside this job
+            st.frontier.join(fetched.select("discovery_seq"), "discovery_seq", "left_anti")
+            .select(*_FRONTIER_COLS)
+            .unionByName(retries)
+            .unionByName(_finish_frontier_rows(queued_new))
+            .join(F.broadcast(next_active), "crawl_id", "left_semi")
+            # each union appends its inputs' partitions: cap the count, or
+            # an open loop's per-batch task count grows with every batch
+            .coalesce(int(spark.conf.get("spark.sql.shuffle.partitions")))
+            .observe(
+                elig_obs,
+                F.sum((F.col("not_before_batch") <= batch + 1).cast("long")).alias("elig"),
+                F.min(F.when(F.col("not_before_batch") > batch + 1, F.col("not_before_batch"))
+                      ).alias("next_nb"),
+                # this batch's admissions: old rows and retries all carry
+                # seq < next_seq; the purge cannot drop new rows because
+                # admission already ran behind the identical active set
+                F.sum((F.col("discovery_seq") >= F.lit(st.next_seq)).cast("long")).alias("n_new"),
+            )
+        ).localCheckpoint()
+        st.replace("frontier", frontier)
         em = elig_obs.get
-        pending = (int(em["elig"] or 0), em["next_nb"])
+        st.pending = (int(em["elig"] or 0), em["next_nb"])
         if n_admitted is None:
             n_admitted = int(em["n_new"] or 0)
-        seq_floor = next_seq  # this batch's new admissions carry seq >= this
-        next_seq += n_admitted
+        seq_floor = st.next_seq  # this batch's new admissions carry seq >= this
+        st.next_seq += n_admitted
 
-        # durable per-batch JOURNAL — O(batch), ONE write job (r3 #3: the
-        # separate frontier_delta + lineage writes were two of the ~4
-        # fixed per-batch jobs dragging the thin-wave tail). Rows:
-        #   'rm'      — the scheduled seqs leave (from the materialized
-        #               fetched table)
-        #   'add'     — retries + new admissions enter
-        #   'lineage' — per-partition lineage + metrics (north rule),
-        #               null frontier columns
-        # Full O(frontier) snapshots happen only every
-        # frontier_snapshot_every batches; storage.read_frontier replays
-        # the 'rm'/'add' rows over the newest snapshot (the Iceberg MERGE
-        # equivalent — at a 10^10-row frontier the per-batch durable cost
-        # must not be O(frontier)) and ignores 'lineage' rows.
-        with _timed("journal build"):
-            _ftypes = {f.name: f.dataType for f in frontier.schema.fields}
-            # `add` rows = retries + this batch's new admissions, read back
-            # from the just-checkpointed frontier's CACHED blocks instead of
-            # re-running the stamp/window plan (pre-r4 this job re-executed
-            # the whole with_sequence + sha2 pipeline a second time — pure
-            # duplicated per-row work). Retries are exactly the frontier
-            # rows whose seq was scheduled this batch; new rows carry
-            # seq >= seq_floor. Rows of crawls purged by next_active are
-            # absent here, which is read-equivalent: budgets are monotone,
-            # so every journal consumer (read_frontier replay at resume,
-            # frontier_left) re-applies the same purge at read time.
-            add_rows = (
-                frontier.join(
-                    fetched.select("discovery_seq").withColumn(
-                        "_sch", F.lit(True)
-                    ),
-                    "discovery_seq",
-                    "left",
-                )
-                .where(
-                    (F.col("discovery_seq") >= F.lit(seq_floor))
-                    | F.col("_sch").isNotNull()
-                )
-                .drop("_sch")
-                .select(*_FRONTIER_COLS)
-                .withColumn("_op", F.lit("add"))
-            )
-            rm_rows = fetched.select(
-                *[
-                    F.col(c)
-                    if c == "discovery_seq"
-                    else F.lit(None).cast(_ftypes[c]).alias(c)
-                    for c in _FRONTIER_COLS
-                ]
-            ).withColumn("_op", F.lit("rm"))
-            lineage = (
-                fetched.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count("*").alias("rows_fetched"),
-                    F.sum(_is_page().cast("long")).alias("rows_ok"),
-                )
-                .select(
-                    F.lit(batch).cast("long").alias("batch_id"),
-                    F.col("partition_id"),
-                    F.lit(n_elig).cast("long").alias("rows_in"),
-                    F.col("rows_fetched").cast("long"),
-                    F.col("rows_ok").cast("long").alias("rows_deduped"),
-                    F.lit(n_admitted).cast("long").alias("rows_admitted"),
-                    F.lit(
-                        datetime.datetime.now(datetime.timezone.utc).isoformat()
-                    ).alias("commit_ts"),
-                    F.lit("lineage").alias("_op"),
-                )
-            )
-            journal_df = (
-                rm_rows.unionByName(add_rows)
-                .withColumn("_b", F.lit(batch).cast("long"))
-                .unionByName(lineage, allowMissingColumns=True)
-            )
-        # OVERLAP the journal write with the rest of the batch (guide
-        # §2.6: actions are only sequential because the driver calls them
-        # sequentially). The journal reads this batch's CACHED frontier
-        # blocks + the materialized fetched parquet — nothing the
-        # remaining per-batch work (autothrottle/bloom/state writes, the
-        # next batch's fetch) mutates — and durability only requires it
-        # on disk BEFORE the next manifest commit (the commit point): a
-        # torn journal above the last manifest is rolled back on resume
-        # exactly like any other uncommitted write. `_flush_journal()`
-        # joins the in-flight write at every commit/return point below.
-        _flush_journal()
-        _journal_state["fut"] = _journal_pool.submit(
-            store.write_table, journal_df, batch, "frontier_delta"
+        # durable per-batch JOURNAL — O(batch), ONE write job. Rows: 'rm'
+        # (the scheduled seqs leave), 'add' (retries + new admissions
+        # enter), 'lineage' (per-partition lineage + metrics, north rule).
+        # storage.read_frontier replays 'rm'/'add' over the newest full
+        # snapshot (one every frontier_snapshot_every batches — the
+        # Iceberg MERGE equivalent) and ignores 'lineage'.
+        _ftypes = {f.name: f.dataType for f in frontier.schema.fields}
+        # `add` rows come from the just-checkpointed frontier's CACHED
+        # blocks, not a re-run of the stamp plan: retries are the rows
+        # whose seq was scheduled this batch, new rows carry seq >=
+        # seq_floor. Rows of crawls purged by next_active are absent,
+        # which is read-equivalent: budgets are monotone, so every journal
+        # reader re-applies the same purge at read time.
+        add_rows = (
+            frontier.join(fetched.select("discovery_seq").withColumn("_sch", F.lit(True)),
+                          "discovery_seq", "left")
+            .where((F.col("discovery_seq") >= F.lit(seq_floor)) | F.col("_sch").isNotNull())
+            .select(*_FRONTIER_COLS)
+            .withColumn("_op", F.lit("add"))
         )
+        rm_rows = fetched.select(*[
+            F.col(c) if c == "discovery_seq" else F.lit(None).cast(_ftypes[c]).alias(c)
+            for c in _FRONTIER_COLS
+        ]).withColumn("_op", F.lit("rm"))
+        lineage = (
+            fetched.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count("*").alias("rows_fetched"), F.sum(_is_page().cast("long")).alias("rows_ok"))
+            .select(
+                F.lit(batch).cast("long").alias("batch_id"),
+                F.col("partition_id"),
+                F.lit(n_elig).cast("long").alias("rows_in"),
+                F.col("rows_fetched").cast("long"),
+                F.col("rows_ok").cast("long").alias("rows_deduped"),
+                F.lit(n_admitted).cast("long").alias("rows_admitted"),
+                F.lit(datetime.datetime.now(datetime.timezone.utc).isoformat()).alias("commit_ts"),
+                F.lit("lineage").alias("_op"),
+            )
+        )
+        journal_df = (
+            rm_rows.unionByName(add_rows)
+            .withColumn("_b", F.lit(batch).cast("long"))
+            .unionByName(lineage, allowMissingColumns=True)
+        )
+        # OVERLAP the journal write with the rest of the batch: it reads
+        # only the cached frontier and the fetched parquet, and must be on
+        # disk only before the next manifest commit (a torn journal above
+        # the last manifest is rolled back on resume). With the previous
+        # journal joined, the superseded checkpoints have no reader left.
+        st.resolve("journal")
+        st.release()
+        st.submit("journal", store.write_table, journal_df, batch, "frontier_delta")
 
-        if policy.autothrottle:
+        if pol.autothrottle:
             # EWMA update from this batch's observed latencies (all
             # scheduled fetches of the host)
             obs = fetched.groupBy("host").agg(F.avg("latency_class").alias("_m"))
-            host_lat = (
-                host_lat.join(obs, "host", "full")
-                .select(
-                    "host",
-                    F.when(
-                        F.col("ewma").isNotNull() & F.col("_m").isNotNull(),
-                        F.lit(policy.ewma_alpha) * F.col("_m")
-                        + F.lit(1.0 - policy.ewma_alpha) * F.col("ewma"),
-                    )
-                    .when(F.col("_m").isNotNull(), F.col("_m"))
-                    .otherwise(F.col("ewma"))
-                    .alias("ewma"),
-                    F.when(F.col("_m").isNotNull(), F.lit(batch).cast("long"))
-                    .otherwise(F.col("last_b"))
-                    .alias("last_b"),
-                )
+            host_lat = st.host_lat.join(obs, "host", "full").select(
+                "host",
+                F.when(
+                    F.col("ewma").isNotNull() & F.col("_m").isNotNull(),
+                    F.lit(pol.ewma_alpha) * F.col("_m") + F.lit(1.0 - pol.ewma_alpha) * F.col("ewma"),
+                ).when(F.col("_m").isNotNull(), F.col("_m")).otherwise(F.col("ewma")).alias("ewma"),
+                F.when(F.col("_m").isNotNull(), F.lit(batch).cast("long"))
+                .otherwise(F.col("last_b")).alias("last_b"),
             )
-            if policy.autothrottle_ttl_batches:
-                # TTL eviction (r3 #8): hosts idle > ttl batches leave the
-                # state table — host_lat is bounded by the active-host set
-                # of the trailing window, not the 10^8-host crawl lifetime.
-                # The EWMA re-seeds from the first batch mean on return
-                # (the `_m is not null & ewma is null` branch above);
-                # oracle.py applies the identical rule at the same point.
+            if pol.autothrottle_ttl_batches:
+                # TTL eviction: hosts idle > ttl batches leave the state,
+                # so it is bounded by the trailing active-host window; the
+                # EWMA re-seeds on return (oracle.py: the same rule)
                 host_lat = host_lat.where(
-                    F.lit(batch) - F.col("last_b")
-                    <= F.lit(policy.autothrottle_ttl_batches)
-                )
-            host_lat = _maybe_ck(host_lat, batch)
+                    F.lit(batch) - F.col("last_b") <= F.lit(pol.autothrottle_ttl_batches))
+            # LAZY: the next batch's fetch job materializes it, and lineage
+            # is truncated so chains never deepen across batches
+            st.replace("host_lat", host_lat.localCheckpoint(eager=False))
 
-        if policy.use_bloom and n_admitted_rows:
-            # a batch that admitted nothing (common in the thin tail)
-            # contributes no new seen rows — the delta build + OR-merge
-            # cogroup would be two no-op python stages; skip them outright
-            with _timed("bloom merge"):
-                delta = build_bloom_delta(
-                    admitted_r.select("url_norm"), n_buckets=policy.bloom_buckets
-                )
-                bloom = merge_blooms(bloom, delta)
-                # checkpoint in the background; resolved before the next
-                # batch's admission consumes the bloom
-                _submit_ck("bloom", bloom)
+        if pol.use_bloom and (n_admitted_rows or st.bloom is None):
+            # a batch that admitted nothing (common in the thin tail) adds
+            # no seen rows, so it skips the delta build + merge. A fresh
+            # run has no bloom yet: its seed admissions join this delta.
+            # Built and checkpointed in the background; resolved before
+            # the next batch's admission consumes the bloom
+            urls = admitted_r.select("url_norm")
+            if st.bloom is None:
+                urls = urls.unionByName(store.read_table(spark, -1, "admitted").select("url_norm"))
+            st.submit("bloom", self._grow_bloom, st.bloom, urls)
 
-        durable = (
-            policy.checkpoint_every <= 1
-            or batch % policy.checkpoint_every == 0
-            or (stop_after_batch is not None and batch >= stop_after_batch)
-        )
+        stop = self.stop_after_batch is not None and batch >= self.stop_after_batch
+        durable = stop or pol.checkpoint_every <= 1 or batch % pol.checkpoint_every == 0
         if durable:
-            budget_state = _resolve("budget", budget_state)
-            strat_state = _resolve("strat", strat_state)
-            if batch % policy.frontier_snapshot_every == 0:
-                store.write_table(frontier, batch, "frontier")
-            store.write_table(budget_state, batch, "budget")
-            store.write_table(strat_state, batch, "strategy")
-            if policy.autothrottle:
-                store.write_table(host_lat, batch, "hostlat")
-            _flush_journal()  # the journal must precede its manifest
-            store.commit(batch, {"next_seq": next_seq})
-            last_committed = batch
-            if policy.compact_seen_every and batch % policy.compact_seen_every == 0:
-                with _timed("seen compaction"):
-                    store.compact_seen(
-                        spark, batch,
-                        n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                    )
+            self._commit(batch, snapshot=batch % pol.frontier_snapshot_every == 0)
+            if pol.compact_seen_every and batch % pol.compact_seen_every == 0:
+                store.compact_seen(spark, batch, n_buckets=int(
+                    spark.conf.get("spark.sql.shuffle.partitions")))
+        seconds = round(time.time() - t0, 2)
+        self.batch_seconds.append(seconds)
+        st.batch, self.done = batch + 1, stop
+        return BatchReport(batch, seconds)
 
-        batch_seconds.append(round(time.time() - _bt0, 2))
-        if stop_after_batch is not None and batch >= stop_after_batch:
-            _journal_pool.shutdown(wait=True)
-            return CrawlRunResult(
-                store, batch, batch_seconds,
-                policy.max_failed_pages, _default_cap,
-            )
-        batch += 1
+    def close(self, ok: bool = True) -> None:
+        """When ``ok``: make the final commit (the terminal state is always
+        durable) and join every background job, re-raising its failure.
+        Always: stop the pool and release the cache."""
+        st = self.state
+        if st is None:
+            return
+        try:
+            if ok:
+                if st.batch - 1 > st.last_committed:
+                    self._commit(st.batch - 1, snapshot=True)
+                for name in list(st.futures):
+                    st.resolve(name)
+        finally:
+            st.close()
 
-    # final commit so the terminal state is always durable
-    final = batch - 1
-    if final > last_committed:
-        with _timed("final commit"):
-            budget_state = _resolve("budget", budget_state)
-            strat_state = _resolve("strat", strat_state)
-            store.write_table(frontier, final, "frontier")
-            store.write_table(budget_state, final, "budget")
-            store.write_table(strat_state, final, "strategy")
-            _flush_journal()
-            store.commit(final, {"next_seq": next_seq})
-    _journal_pool.shutdown(wait=True)
-    return CrawlRunResult(
-        store, final, batch_seconds,
-        policy.max_failed_pages, _default_cap,
-        out_hashes=acc,
-    )
+    def result(self) -> CrawlRunResult:
+        return CrawlRunResult(
+            self.store, self.state.last_committed, self.batch_seconds,
+            self.policy.max_failed_pages, self.default_cap,
+            out_hashes=self.state.acc if self.drained else None,
+        )
+
+
+def run_crawl(
+    spark: SparkSession, cfg: synth.SynthConfig, seeds: list[dict],
+    robots_rules: DataFrame, checkpoint_dir: str,
+    policy: CrawlPolicy = CrawlPolicy(), resume: bool = False,
+    stop_after_batch: int | None = None, fetcher=None, before_step=None,
+) -> CrawlRunResult:
+    """Run (or resume) the crawl to completion: open a CrawlLoop, step it
+    until no batch is left, close it. ``stop_after_batch`` kills the loop
+    right after committing that batch — used by the resume tests.
+
+    ``fetcher(scheduled_df, n_rows_hint) -> DataFrame`` swaps the fetch
+    transport (default: the deterministic synthetic web; pass
+    ``operators.http_fetch.fetch_scheduled_http`` for real HTTP) — the
+    loop's politeness/admission/seen/checkpoint machinery is
+    transport-agnostic, it only needs the fetch output schema.
+
+    ``before_step()`` is called before every batch and may block until
+    that batch is due; returning False ends the run, with the final
+    commit. It is the hook the streaming driver paces its ticks with."""
+    with CrawlLoop(
+        spark, cfg, seeds, robots_rules, checkpoint_dir, policy,
+        resume, stop_after_batch, fetcher,
+    ) as loop:
+        while not loop.done and (before_step is None or before_step()):
+            loop.step()
+    return loop.result()

@@ -3,13 +3,16 @@
 Two surfaces:
 
 1. ``stream_crawl`` — the frontier loop driven by a Structured Streaming
-   ticker: a rate source fires micro-batches and ``foreachBatch`` advances
-   one crawl batch per tick. The loop body and its commit discipline are
-   exactly plans/frontier_loop.py's (the batch store is the state; a tick
-   that crashes mid-batch is rolled back and replayed, so exactly-once
-   falls out of the manifest protocol, not the streaming checkpoint).
-   The reference has no event-time semantics to preserve — its "streaming"
-   is a beanstalkd poll loop (crawler/worker/crawl_job_listener.py:126-360).
+   ticker: a rate source fires micro-batches and each one advances ONE
+   open plans/frontier_loop.CrawlLoop by one crawl batch. The loop opens
+   (initializes or resumes) once per stream, not once per tick, so a tick
+   costs one batch, not a resume of the whole seen set. Its commit
+   discipline is the batch loop's: the batch store is the state, a tick
+   that crashes mid-batch is rolled back and replayed by the next stream
+   on the same checkpoint, so exactly-once falls out of the manifest
+   protocol, not the streaming checkpoint. The reference has no
+   event-time semantics to preserve — its "streaming" is a beanstalkd
+   poll loop (crawler/worker/crawl_job_listener.py:126-360).
 
 2. ``stream_events_rollup`` — a genuine event-time pipeline over an events
    stream (watermark + windowed aggregation), the pattern a training-data
@@ -17,6 +20,10 @@ Two surfaces:
 """
 
 from __future__ import annotations
+
+import dataclasses
+import queue
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,38 +45,55 @@ def stream_crawl(
     fetcher=None,
 ) -> CrawlRunResult:
     """Drive the crawl via a streaming ticker; returns when the frontier
-    drains (or after max_ticks). Each tick advances at most one batch by
-    calling run_crawl(resume=True, stop_after_batch=<next>). ``fetcher``
-    passes through to run_crawl (the real-HTTP transport swap works under
-    the streaming driver too).
+    drains, after ``stop_after_batch``, or after ``max_ticks`` ticks.
+
+    One ``run_crawl(resume=True)`` call serves the whole stream: it opens
+    the loop once (fresh, or from the checkpoint's last commit) and runs
+    one batch per micro-batch through its ``before_step`` hook. The
+    tick's foreachBatch callback blocks until its batch has committed
+    (every tick commits, whatever ``policy.checkpoint_every`` says), so
+    one micro-batch covers exactly one crawl batch. A failed batch raises
+    here at once; so does a ticker query that dies. ``fetcher`` passes
+    through to run_crawl (the real-HTTP transport swap works under the
+    streaming driver too).
 
     ``stop_after_batch`` is the deterministic kill switch (same contract
-    as the batch loop's): the ticker refuses to start any batch past it,
-    leaving a mid-crawl checkpoint a second ``stream_crawl`` on the same
-    directory resumes from — the kill/resume equality gate in
-    tests/test_streaming.py runs through this."""
-    state = {"done": False, "result": None, "started": False}
+    as the batch loop's): no batch past it starts, leaving a mid-crawl
+    checkpoint a second ``stream_crawl`` on the same directory resumes
+    from — the kill/resume equality gate in tests/test_streaming.py runs
+    through this."""
+    ticks: queue.Queue = queue.Queue()  # one "batch committed" event per tick
+    closed = threading.Event()
 
     def tick(_df: DataFrame, _epoch: int) -> None:
-        if state["done"]:
+        if closed.is_set():
             return
-        from ..storage import BatchStore
+        committed = threading.Event()
+        ticks.put(committed)
+        while not (committed.wait(0.2) or closed.is_set()):
+            pass
 
-        store = BatchStore(checkpoint_dir)
-        last = store.last_committed()
-        resume = state["started"] or last is not None
-        nxt = (last + 1) if last is not None else 0
-        if stop_after_batch is not None and nxt > stop_after_batch:
-            state["done"] = True
-            return
-        res = run_crawl(
-            spark, cfg, seeds, robots_rules, checkpoint_dir, policy,
-            resume=resume, stop_after_batch=nxt, fetcher=fetcher,
-        )
-        state["started"] = True
-        state["result"] = res
-        if res.last_batch < nxt:  # loop ended before reaching the tick target
-            state["done"] = True
+    held: threading.Event | None = None  # the tick whose batch is running
+    n_ticks = 0
+
+    def next_tick() -> bool:
+        """Release the tick whose batch just committed, then wait for the
+        next one; False once ``max_ticks`` ticks have run."""
+        nonlocal held, n_ticks
+        if held is not None:
+            held.set()
+            held = None
+        if n_ticks >= max_ticks:
+            return False
+        while held is None:
+            if not q.isActive:
+                raise q.exception() or RuntimeError("the ticker query stopped")
+            try:
+                held = ticks.get(timeout=0.2)
+            except queue.Empty:
+                pass
+        n_ticks += 1
+        return True
 
     ticker = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
@@ -80,15 +104,14 @@ def stream_crawl(
         .start()
     )
     try:
-        import time
-
-        ticks = 0
-        while not state["done"] and ticks < max_ticks:
-            time.sleep(0.2)
-            ticks += 1
+        return run_crawl(
+            spark, cfg, seeds, robots_rules, checkpoint_dir,
+            dataclasses.replace(policy, checkpoint_every=1), resume=True,
+            stop_after_batch=stop_after_batch, fetcher=fetcher, before_step=next_tick,
+        )
     finally:
+        closed.set()
         q.stop()
-    return state["result"]
 
 
 def stream_events_rollup(

@@ -67,3 +67,31 @@ def test_scheduler_jobs_per_batch_bounded(spark, tmp_path):
     assert n_batches >= 3
     jobs_per_batch = len(ids) / n_batches
     assert jobs_per_batch <= 60, (len(ids), n_batches, jobs_per_batch)
+
+
+def test_cached_blocks_do_not_grow(spark, tmp_path):
+    """A loop that stays open (the streaming driver keeps one for the
+    whole stream) unpersists each superseded state checkpoint and keeps
+    the frontier's partition count capped, so the cached-block count after
+    the 6th batch is no larger than after batch 2. Four shuffle partitions
+    put the frontier at its cap by batch 2 (it gains up to two per batch)."""
+    from crawler_distributed_spark.plans.frontier_loop import CrawlLoop
+
+    jsc = spark.sparkContext._jsc.sc()
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    blocks = {}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        with CrawlLoop(spark, CFG, SEEDS, robots, str(tmp_path / "ck"), CrawlPolicy()) as loop:
+            while (rep := loop.step()) is not None:
+                # let the background checkpoints land, so every count is
+                # taken at the same point of the batch cycle
+                for fut in list(loop.state.futures.values()):
+                    fut.result()
+                blocks[rep.batch] = sum(i.numCachedPartitions() for i in jsc.getRDDStorageInfo())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    batches = sorted(blocks)
+    assert len(batches) >= 6 and batches[2] == 2, blocks
+    assert blocks[batches[5]] <= blocks[2], blocks

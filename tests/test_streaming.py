@@ -72,6 +72,76 @@ def test_stream_crawl_kill_resume(spark, tmp_path):
     assert seen == oracle.seen
 
 
+def _assert_oracle_equal(spark, res):
+    oracle = run_oracle(CFG, SEEDS, CrawlPolicy())
+    trace = sorted(
+        (r.crawl_id, r.batch_id, r.seq_in_batch, r.url_norm, r.host, r.depth)
+        for r in res.trace(spark).collect()
+    )
+    assert trace == sorted(oracle.trace)
+    seen = {}
+    for r in res.seen(spark).collect():
+        seen.setdefault(r.crawl_id, set()).add(r.url_norm)
+    assert seen == oracle.seen
+
+
+def test_stream_crawl_failure_raises_then_resumes(spark, tmp_path):
+    """A batch that fails under the streaming driver raises out of
+    stream_crawl within seconds (the driver must not poll a dead query),
+    and the checkpoint it leaves resumes to the oracle. ``max_ticks``
+    counts ticks: a one-tick stream runs exactly one batch."""
+    import time
+
+    import pytest
+
+    from crawler_distributed_spark.operators.fetch import fetch_scheduled
+
+    ck = str(tmp_path / "fail_ck")
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    calls = []
+
+    def failing_fetcher(scheduled, hint):
+        calls.append(time.time())
+        if len(calls) == 2:  # batch 1
+            raise RuntimeError("injected fetch failure")
+        return fetch_scheduled(scheduled, CFG, n_rows_hint=hint)
+
+    with pytest.raises(RuntimeError, match="injected fetch failure"):
+        stream_crawl(spark, CFG, SEEDS, robots, ck, fetcher=failing_fetcher)
+    assert time.time() - calls[-1] < 30
+    one = stream_crawl(spark, CFG, SEEDS, robots, ck, max_ticks=1)
+    assert one.last_batch == 1
+    _assert_oracle_equal(spark, stream_crawl(spark, CFG, SEEDS, robots, ck))
+
+
+def test_stream_crawl_reads_no_state_from_disk(spark, tmp_path, monkeypatch):
+    """One loop stays open across ticks: a fresh stream of several ticks
+    never reads the frontier or the seen set back from disk (the seen-set
+    compaction, which rewrites it by design, is switched off here) and
+    still equals the oracle. Every tick commits its batch, even under a
+    sparse checkpoint_every."""
+    import os
+
+    from crawler_distributed_spark.storage import BatchStore
+
+    reads = []
+    for name in ("read_frontier", "read_seen"):
+        real = getattr(BatchStore, name)
+        monkeypatch.setattr(
+            BatchStore, name,
+            lambda self, *a, _n=name, _f=real, **k: reads.append(_n) or _f(self, *a, **k),
+        )
+    pol = CrawlPolicy(compact_seen_every=0, checkpoint_every=3)
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    res = stream_crawl(spark, CFG, SEEDS, robots, str(tmp_path / "ck"), pol)
+    assert len(res.batch_seconds) >= 3
+    assert reads == []
+    monkeypatch.undo()
+    _assert_oracle_equal(spark, res)
+    batches = {r.batch_id for r in res.trace(spark).select("batch_id").collect()}
+    assert all(os.path.exists(res.store.manifest_path(b)) for b in batches)
+
+
 def test_stream_events_rollup(spark, tmp_path):
     import os
 

@@ -387,3 +387,61 @@ def test_resumed_run_has_no_out_hashes(spark, tmp_path):
     assert part.out_hashes is None
     full = run_crawl(spark, CFG, SEEDS, robots, d, pol, resume=True)
     assert full.out_hashes is None
+
+
+def _assert_oracle_equal(spark, res, oracle):
+    assert _engine_trace(spark, res) == sorted(
+        oracle.trace, key=lambda t: (t[1], t[0], t[2])
+    )
+    seen = {}
+    for r in res.seen(spark).collect():
+        seen.setdefault(r.crawl_id, set()).add(r.url_norm)
+    assert seen == oracle.seen
+
+
+@pytest.mark.parametrize("buckets", [16, 64])
+def test_bloom_split_at_any_bucket_width(spark, tmp_path, oracle_result, buckets):
+    """The bloom split path (bloom_split_min=0: every batch after the
+    first probes the bloom) must equal the oracle at any bucket width:
+    build and probe share one BloomGeometry. A probe at the default 64
+    buckets of a 16-bucket bloom calls most seen URLs novel and
+    re-admits them. Killed after batch 2 and resumed, so both the bloom
+    grown batch by batch and the one rebuilt at resume are probed."""
+    pol = CrawlPolicy(bloom_split_min=0, bloom_buckets=buckets)
+    d = str(tmp_path / "bloom_ck")
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    partial = run_crawl(spark, CFG, SEEDS, robots, d, pol, stop_after_batch=2)
+    assert partial.last_batch == 2
+    res = run_crawl(spark, CFG, SEEDS, robots, d, pol, resume=True)
+    _assert_oracle_equal(spark, res, oracle_result)
+
+
+def test_failed_background_write_raises_then_resumes(
+    spark, tmp_path, oracle_result, monkeypatch
+):
+    """A journal write that fails on the background pool must make
+    run_crawl raise (never a silent commit past it), and the checkpoint
+    it leaves must resume to the oracle's exact output."""
+    import threading
+
+    from crawler_distributed_spark.storage import BatchStore
+
+    real_write = BatchStore.write_table
+    failed_on = []
+
+    def flaky_write(self, df, batch_id, table):
+        if table == "frontier_delta" and batch_id == 2:
+            failed_on.append(threading.current_thread())
+            raise RuntimeError("injected journal write failure")
+        return real_write(self, df, batch_id, table)
+
+    d = str(tmp_path / "fail_ck")
+    robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
+    monkeypatch.setattr(BatchStore, "write_table", flaky_write)
+    with pytest.raises(RuntimeError, match="injected journal write failure"):
+        run_crawl(spark, CFG, SEEDS, robots, d, POLICY)
+    monkeypatch.setattr(BatchStore, "write_table", real_write)
+    assert failed_on and failed_on[0] is not threading.main_thread()
+    assert BatchStore(d).last_committed() == 1
+    res = run_crawl(spark, CFG, SEEDS, robots, d, POLICY, resume=True)
+    _assert_oracle_equal(spark, res, oracle_result)
