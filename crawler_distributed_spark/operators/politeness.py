@@ -22,6 +22,11 @@ Two-phase exact top-q under salting (SURVEY.md §7 risk #3):
   phase 2: window over (crawl_id, host) → row_number ≤ q on the ≤ S·q
            survivors per host (tiny), giving the exact host-level top-q.
 
+Then a window over crawl_id stamps ``seq_in_batch`` and applies the
+crawl's page budget. Both windows share one hash(crawl_id) exchange; the
+per-crawl window stays small because domain scoping bounds the hosts per
+crawl and phase 2 bounds the rows per host (see select_fetch_batch).
+
 Order key everywhere: (depth ASC, priority_score DESC, discovery_seq ASC)
 — total, data-defined, parallelism-independent.
 """
@@ -35,7 +40,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..policy import CrawlPolicy
-from .sequence import with_sequence
 
 _SORT_COLS = ["depth", "priority_score", "discovery_seq"]
 _SORT_ASC = [True, False, True]
@@ -69,7 +73,6 @@ def select_fetch_batch(
     policy: CrawlPolicy,
     n_eligible: int | None = None,
     host_quotas: DataFrame | None = None,
-    hosts_per_crawl_bound: int | None = None,
 ) -> DataFrame:
     """Pick this batch's fetch set from eligible frontier rows.
 
@@ -82,47 +85,35 @@ def select_fetch_batch(
     skew, which cannot bite on a small batch; the window in phase 2 is the
     exact operator either way.
 
+    Precondition: each crawl has few hosts. ``seq_in_batch`` is a
+    row_number over the crawl's phase-2 survivors, whose count is at most
+    hosts-per-crawl × quota; the loop's domain scoping (F4: the two
+    allowed hosts, plus at most the seed's host) keeps that at a few
+    quota's worth of rows per crawl at any frontier size.
+
     Returns the scheduled rows with ``seq_in_batch`` (per-crawl trace
     order, 1-based).
     """
+    n_part = int(eligible.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if n_eligible is not None and n_eligible < policy.salt_threshold:
         phase1 = eligible
     else:
         salted = eligible.withColumn(
             "_salt", F.pmod(F.xxhash64("url_norm"), F.lit(policy.n_salts))
         )
-        spark = eligible.sparkSession
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         phase1 = (
             salted.repartition(n_part, "crawl_id", "host", "_salt")
             .mapInPandas(_salt_local_topq(policy.quota_per_host), schema=salted.schema)
             .drop("_salt")
         )
 
-    window_input_bound = (
-        hosts_per_crawl_bound * policy.quota_per_host
-        if hosts_per_crawl_bound is not None
-        else None
-    )
-    use_crawl_window = (
-        window_input_bound is not None
-        and window_input_bound <= policy.seq_singlepart_threshold
-    ) or (n_eligible is not None and n_eligible <= policy.seq_singlepart_threshold)
-    if use_crawl_window:
-        # ONE exchange for both windows (guide §2.4): hash(crawl_id)
-        # satisfies the clustering requirement of the (crawl_id, host)
-        # quota window AND of the downstream per-crawl seq-stamp window (a
-        # hash partitioning on a SUBSET of the window keys clusters them),
-        # so this explicit repartition replaces two back-to-back exchanges
-        # — hash(crawl_id, host), then hash(crawl_id) — with one. Safe on
-        # skew ONLY because this path is gated on a bounded per-crawl
-        # window input (≤ hosts_per_crawl × quota rows per crawl); the
-        # unbounded path below keeps the (crawl_id, host) spread.
-        n_part = int(phase1.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        phase1 = phase1.repartition(n_part, "crawl_id")
-    host_w = Window.partitionBy("crawl_id", "host").orderBy(
-        F.col("depth").asc(), F.col("priority_score").desc(), F.col("discovery_seq").asc()
-    )
+    # ONE exchange for both windows (guide §2.4): hash(crawl_id) satisfies
+    # the clustering requirement of the (crawl_id, host) quota window AND
+    # of the per-crawl seq_in_batch window (a hash partitioning on a
+    # SUBSET of the window keys clusters them).
+    phase1 = phase1.repartition(n_part, "crawl_id")
+    order = (F.col("depth").asc(), F.col("priority_score").desc(), F.col("discovery_seq").asc())
+    host_w = Window.partitionBy("crawl_id", "host").orderBy(*order)
     ranked = phase1.withColumn("_rn", F.row_number().over(host_w))
     if host_quotas is not None:
         # P2 autothrottle analog: per-host quota (≤ default) from the EWMA
@@ -133,57 +124,11 @@ def select_fetch_batch(
     else:
         phase2 = ranked.where(F.col("_rn") <= policy.quota_per_host).drop("_rn")
 
-    # --- seq_in_batch stamp + per-crawl budget cap (VERDICT r2 #1).
-    # The naive form is a row_number window partitioned by crawl_id — with
-    # ONE active crawl whose phase-2 output is large, that sorts the
-    # entire scheduled batch through one task. Two paths:
-    #
-    # * window path: safe whenever the window's INPUT per crawl is small.
-    #   Phase 2 already capped rows to quota per (crawl, host), so the
-    #   input is ≤ hosts_per_crawl × quota_per_host — for this engine's
-    #   domain-scoped crawls (exactly 2 allowed hosts, plans/frontier_loop
-    #   _crawl_dim) that is ≤ 2·quota ≈ 10² rows per crawl REGARDLESS of
-    #   frontier size, so the stamp embeds in the same stage with no extra
-    #   jobs. Callers assert this by passing ``hosts_per_crawl_bound``.
-    # * two-phase path (unbounded-crawl escape hatch, e.g. a caller
-    #   without host scoping): reuse the range-sort machinery from
-    #   operators/sequence.py — one range exchange ordered by (crawl_id,
-    #   depth, -priority, discovery_seq) stamps a GLOBAL consecutive
-    #   sequence (no single-partition stage); the per-crawl 1-based rank
-    #   falls out by subtracting each crawl's minimum global seq (a tiny
-    #   map-side-partial agg, broadcast back). Because the range sort
-    #   leads with crawl_id, every crawl's rows are consecutive in the
-    #   global order, so gseq − min(gseq per crawl) + 1 IS row_number
-    #   over the per-crawl window — same (depth, -priority, seq) order,
-    #   bit-identical trace (tests/test_trace_equality.py
-    #   test_scale_paths_trace_equality; tests/test_politeness.py plan
-    #   assertion).
+    # seq_in_batch stamp + per-crawl budget cap (VERDICT r2 #1)
+    crawl_w = Window.partitionBy("crawl_id").orderBy(*order)
     budgeted = phase2.join(F.broadcast(budgets), "crawl_id")
-    if use_crawl_window:
-        crawl_w = Window.partitionBy("crawl_id").orderBy(
-            F.col("depth").asc(),
-            F.col("priority_score").desc(),
-            F.col("discovery_seq").asc(),
-        )
-        scheduled = (
-            budgeted.withColumn("seq_in_batch", F.row_number().over(crawl_w))
-            .where(F.col("seq_in_batch") <= F.col("remaining"))
-            .drop("remaining")
-        )
-    else:
-        stamped, _n = with_sequence(
-            budgeted.withColumn("_negp", -F.col("priority_score")),
-            ["crawl_id", "depth", "_negp", "discovery_seq"],
-            seq_col="_gseq",
-        )
-        starts = stamped.groupBy("crawl_id").agg(F.min("_gseq").alias("_start"))
-        scheduled = (
-            stamped.join(F.broadcast(starts), "crawl_id")
-            .withColumn(
-                "seq_in_batch",
-                (F.col("_gseq") - F.col("_start") + F.lit(1)).cast("int"),
-            )
-            .where(F.col("seq_in_batch") <= F.col("remaining"))
-            .drop("remaining", "_negp", "_gseq", "_start")
-        )
-    return scheduled
+    return (
+        budgeted.withColumn("seq_in_batch", F.row_number().over(crawl_w))
+        .where(F.col("seq_in_batch") <= F.col("remaining"))
+        .drop("remaining")
+    )

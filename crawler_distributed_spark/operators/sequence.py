@@ -38,10 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def _key_of(pdf: pd.DataFrame, order_cols: list[str]) -> str:
-    first = pdf.iloc[0]
-    return json.dumps([first[c].item() if hasattr(first[c], "item") else first[c]
-                       for c in order_cols])
+def _offset_key(values) -> str:
+    """The offsets-table key of a partition's first order key. The driver
+    builds the table from Row values and each stamping task looks itself
+    up with numpy scalars read column by column (a whole-row ``iloc``
+    would upcast an int next to a double), so both sides serialize
+    through here and produce the same bytes."""
+    return json.dumps([v.item() if hasattr(v, "item") else v for v in values])
 
 
 def with_sequence(
@@ -75,9 +78,8 @@ def with_sequence(
     # key, because the range sort leaves each partition ascending. The
     # old pass shipped every row through an Arrow mapInPandas just to
     # read the first row and count; this aggregation is map-side and
-    # moves one row per partition. The key is serialized to the SAME
-    # json the pandas stamp pass produces (_key_of), so the offsets
-    # lookup is unchanged.
+    # moves one row per partition. Both sides key the offsets through
+    # _offset_key.
     counts = (
         sorted_df.groupBy(F.spark_partition_id().alias("_pid"))
         .agg(
@@ -89,7 +91,7 @@ def with_sequence(
     # order partitions by their first key (tuples compare elementwise; the
     # range sort guarantees partition key-ranges are disjoint)
     parts = sorted(
-        ((list(r["k"]), json.dumps(list(r["k"])), r["n"]) for r in counts),
+        ((list(r["k"]), _offset_key(r["k"]), r["n"]) for r in counts),
         key=lambda t: t[0],
     )
     offsets: dict[str, int] = {}
@@ -107,7 +109,7 @@ def with_sequence(
         local = 0
         for pdf in batches:
             if len(pdf) and base is None:
-                base = start + offsets[_key_of(pdf, order_cols)]
+                base = start + offsets[_offset_key(pdf[c].iloc[0] for c in order_cols)]
             n = len(pdf)
             pdf = pdf.copy()
             pdf[seq_col] = pd.array(

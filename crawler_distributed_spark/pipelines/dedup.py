@@ -233,6 +233,11 @@ def simhash_signatures(
         )
         term = bit * F.lit(2**i if i < 63 else -(2**63)).cast("long")
         sig = term if sig is None else (sig + term)
+    # the lanes' no-carry condition, checked in the same projection
+    sig = F.when(
+        F.col("_ntok") >= F.lit(1 << lane_w),
+        F.raise_error(F.lit(f"simhash: a document has 2^{lane_w} or more tokens")),
+    ).otherwise(sig)
     return per_doc.select(id_col, sig.alias("simhash"))
 
 

@@ -47,7 +47,7 @@ from .. import synth
 from ..functions.urls import canonicalize_url, host_col
 from ..operators import seen_filter
 from ..operators.admission import (
-    admit, aggregate_robots_rules, dedup_in_batch, filter_unseen, gate_robots,
+    admit, aggregate_robots_rules, dedup_in_batch, gate_robots,
 )
 from ..operators.fetch import fetch_scheduled
 from ..operators.politeness import select_fetch_batch
@@ -277,6 +277,24 @@ def _admitted_wide(admitted: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
+def _stamp_seq(rows: DataFrame, start: int, n_rows: int, threshold: int) -> DataFrame:
+    """Stamp ``discovery_seq`` = start, start+1, ... in (parent_seq,
+    link_idx) order — a total order (dedup keeps one row per key).
+
+    ``n_rows`` bounds the input (the seed or eligible count). Up to
+    ``threshold`` one global window stamps the rows inside the consumer's
+    own job; above it the two-phase ``with_sequence`` range sort avoids a
+    single-partition stage at the cost of its sample and count jobs. Both
+    give the same values."""
+    if n_rows <= threshold:
+        return rows.withColumn("discovery_seq", (
+            F.row_number().over(Window.orderBy("parent_seq", "link_idx"))
+            + F.lit(start - 1)).cast("long"))
+    # looked up as this module's global, so a wrapper bound there (the
+    # perfbench tracer's sequence.stamp_s) sees the call
+    return with_sequence(rows, ["parent_seq", "link_idx"], start=start)[0]
+
+
 def init_crawl(
     spark: SparkSession,
     seeds: list[dict],
@@ -306,14 +324,8 @@ def init_crawl(
         "crawl_id string, url string, url_norm string, parent_seq long, "
         "link_idx int, depth int, priority_score double",
     ).withColumn("host", host_col(F.col("url_norm")))
-    empty_seen = spark.createDataFrame([], "crawl_id string, url_norm string")
-    deduped = dedup_in_batch(
-        cand.withColumnRenamed("url", "raw_url")
-        .withColumn("allowed_host_1", F.lit(None).cast("string"))
-        .withColumn("allowed_host_2", F.lit(None).cast("string"))
-    )
-    unseen = filter_unseen(deduped, empty_seen)
-    admitted = gate_robots(unseen, robots_rules)
+    deduped = dedup_in_batch(cand.withColumnRenamed("url", "raw_url"))
+    admitted = gate_robots(deduped, robots_rules)
 
     seed_obs = Observation("seen-init")
     store.write_table(
@@ -321,44 +333,19 @@ def init_crawl(
             seed_obs,
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
+            F.sum(F.col("robots_ok").cast("long")).alias("ok"),
         ),
         -1,
         "admitted",
     )
     sm = seed_obs.get
+    n_queued = int(sm["ok"] or 0)
     admitted_r = store.read_table(spark, -1, "admitted")
 
-    robots_ok_rows = admitted_r.where("robots_ok")
-    if len(seeds) <= seq_singlepart_threshold:
-        # small seed set: one global window stamps seqs inside the
-        # frontier-write job itself (same values as with_sequence — the
-        # identical (parent_seq, link_idx) total order, 0-based) instead
-        # of paying the range-sample + count + stamp jobs of the
-        # two-phase path; the count rides the write as an Observation
-        from pyspark.sql import Window as _WS
-
-        queued = robots_ok_rows.withColumn(
-            "discovery_seq",
-            (
-                F.row_number().over(_WS.orderBy("parent_seq", "link_idx")) - 1
-            ).cast("long"),
-        )
-        fr_obs = Observation("frontier-init")
-        store.write_table(
-            _finish_frontier_rows(queued).observe(
-                fr_obs, F.count(F.lit(1)).alias("n")
-            ),
-            -1,
-            "frontier",
-        )
-        n_queued = int(fr_obs.get["n"] or 0)
-    else:
-        queued, n_queued = with_sequence(
-            robots_ok_rows,
-            ["parent_seq", "link_idx"],
-            start=0,
-        )
-        store.write_table(_finish_frontier_rows(queued), -1, "frontier")
+    queued = _stamp_seq(
+        admitted_r.where("robots_ok"), 0, len(seeds), seq_singlepart_threshold
+    )
+    store.write_table(_finish_frontier_rows(queued), -1, "frontier")
     frontier = store.read_table(spark, -1, "frontier")
     budget = spark.createDataFrame(
         [
@@ -644,9 +631,6 @@ class CrawlLoop:
             )
         scheduled = select_fetch_batch(
             eligible, budgets, pol, n_eligible=n_elig, host_quotas=host_quotas,
-            # domain scoping (F4) admits exactly 2 hosts per crawl, so the
-            # per-crawl window input is <= 2*quota rows at any frontier size
-            hosts_per_crawl_bound=2,
         )
         # P6: effective strategy = host escalation level ∨ per-URL 403
         # force-proxy (retry_middleware.py:33-55); the explicit broadcast
@@ -834,31 +818,24 @@ class CrawlLoop:
             _admitted_wide(admitted, batch).observe(  # + seen-set hash (see tr_obs)
                 adm_obs, F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(xxhash64(crawl_id, url_norm))").alias("h"),
+                F.sum(F.col("robots_ok").cast("long")).alias("ok"),
             ),
             batch, "admitted",
         )
         am = adm_obs.get
         n_admitted_rows = int(am["n"] or 0)
+        # every robots_ok row is stamped, those of crawls purged below
+        # included, so next_seq moves past all of them and no seq is handed
+        # out twice (discovery_seq is the frontier's row key)
+        n_admitted = int(am["ok"] or 0)
         if st.acc is not None:
             st.acc["seen_rows"] += n_admitted_rows
             st.acc["seen_hash"] ^= int(am["h"] or 0)
         admitted_r = store.read_table(spark, batch, "admitted")
 
-        robots_ok_rows = admitted_r.where("robots_ok")
-        if n_elig <= pol.seq_singlepart_threshold:
-            # small batch: one global window stamps consecutive seqs (a
-            # single sort of bounded size, embedded in the frontier job —
-            # no range-sample / materialize / count jobs); the admitted
-            # count is recovered from the frontier Observation below
-            # (rows with seq >= next_seq are exactly this batch's)
-            queued_new = robots_ok_rows.withColumn("discovery_seq", (
-                F.row_number().over(Window.orderBy("parent_seq", "link_idx"))
-                + F.lit(st.next_seq - 1)).cast("long"))
-            n_admitted = None
-        else:
-            queued_new, n_admitted = with_sequence(
-                robots_ok_rows, ["parent_seq", "link_idx"], start=st.next_seq
-            )
+        queued_new = _stamp_seq(
+            admitted_r.where("robots_ok"), st.next_seq, n_elig, pol.seq_singlepart_threshold
+        )
 
         # materialization #3: next frontier state (kept hot for the next
         # iteration; parquet-persisted on durable batches). The rebuild
@@ -886,17 +863,11 @@ class CrawlLoop:
                 F.sum((F.col("not_before_batch") <= batch + 1).cast("long")).alias("elig"),
                 F.min(F.when(F.col("not_before_batch") > batch + 1, F.col("not_before_batch"))
                       ).alias("next_nb"),
-                # this batch's admissions: old rows and retries all carry
-                # seq < next_seq; the purge cannot drop new rows because
-                # admission already ran behind the identical active set
-                F.sum((F.col("discovery_seq") >= F.lit(st.next_seq)).cast("long")).alias("n_new"),
             )
         ).localCheckpoint()
         st.replace("frontier", frontier)
         em = elig_obs.get
         st.pending = (int(em["elig"] or 0), em["next_nb"])
-        if n_admitted is None:
-            n_admitted = int(em["n_new"] or 0)
         seq_floor = st.next_seq  # this batch's new admissions carry seq >= this
         st.next_seq += n_admitted
 
@@ -990,7 +961,8 @@ class CrawlLoop:
         durable = stop or pol.checkpoint_every <= 1 or batch % pol.checkpoint_every == 0
         if durable:
             self._commit(batch, snapshot=batch % pol.frontier_snapshot_every == 0)
-            if pol.compact_seen_every and batch % pol.compact_seen_every == 0:
+            # not at batch 0: a fresh crawl's seen set is one delta old
+            if pol.compact_seen_every and batch > 0 and batch % pol.compact_seen_every == 0:
                 store.compact_seen(spark, batch, n_buckets=int(
                     spark.conf.get("spark.sql.shuffle.partitions")))
         seconds = round(time.time() - t0, 2)

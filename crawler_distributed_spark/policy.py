@@ -50,7 +50,6 @@ REDIRECT_STATUSES = frozenset({301, 302, 303, 307, 308})
 ACCEPTED_CONTENT_TYPES = frozenset(
     {"text/html", "application/xhtml+xml", "application/xml", "text/plain"}
 )
-HTML_CONTENT_TYPES = ACCEPTED_CONTENT_TYPES  # back-compat alias
 # of the accepted types only text/html carries spans+outlinks in the
 # synthetic web (the parse stage is a no-op on the others)
 PARSEABLE_CONTENT_TYPES = frozenset({"text/html"})
@@ -107,7 +106,8 @@ class CrawlPolicy:
                                       # newest snapshot — the durable frontier
                                       # cost is O(batch), not O(frontier),
                                       # per batch (10^10-frontier north rule)
-    seq_singlepart_threshold: int = 20_000  # scheduled rows below which
+    seq_singlepart_threshold: int = 20_000  # seed count (init) or eligible
+                                            # count (each batch) up to which
                                             # discovery_seq stamping uses one
                                             # global window (no range-sample /
                                             # counting jobs); above it, the

@@ -119,9 +119,10 @@ def _quiet_windowexec(spark: SparkSession) -> None:
     """Silence WindowExec's no-partition warning.
 
     The engine has exactly one deliberately-unpartitioned window: the
-    small-batch discovery_seq stamp (plans/frontier_loop.py), gated by
-    ``policy.seq_singlepart_threshold`` so at most 20k rows ever pass
-    through it — above that the two-phase range-sort path runs instead.
+    small-batch discovery_seq stamp (plans/frontier_loop._stamp_seq),
+    taken only while the seed or eligible count is at most
+    ``policy.seq_singlepart_threshold`` — above that the two-phase
+    range-sort path runs instead.
     The warning is therefore always benign here, and it sprays log tails
     until real regressions become invisible. Per-class suppression (not a
     global level change) keeps every other WARN intact."""

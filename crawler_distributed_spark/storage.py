@@ -258,30 +258,24 @@ class BatchStore:
         resume/rollback."""
         base = self._compacted_upto(upto_batch)
         compacted = None
-        delta_paths = []
         start = -1
         if base is not None:
             d = os.path.join(self.compacted_dir(), f"upto={base}")
-            spec_path = os.path.join(d, "_bucketspec.json")
-            if os.path.exists(spec_path):
-                with open(spec_path) as f:
-                    spec = json.load(f)
-                tbl = f"seen_c_{self._digest()}_{base}"
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                spark.sql(
-                    f"CREATE TABLE {tbl} (crawl_id STRING, url_norm STRING) "
-                    f"USING parquet "
-                    f"CLUSTERED BY ({', '.join(spec['bucket_cols'])}) "
-                    f"SORTED BY (crawl_id, url_norm) "
-                    f"INTO {spec['n_buckets']} BUCKETS "
-                    f"LOCATION '{d}'"
-                )
-                compacted = spark.table(tbl)
-            else:
-                # legacy pre-bucketed compacted copy: treat as a delta
-                delta_paths.append(d)
+            with open(os.path.join(d, "_bucketspec.json")) as f:
+                spec = json.load(f)
+            tbl = f"seen_c_{self._digest()}_{base}"
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            spark.sql(
+                f"CREATE TABLE {tbl} (crawl_id STRING, url_norm STRING) "
+                f"USING parquet "
+                f"CLUSTERED BY ({', '.join(spec['bucket_cols'])}) "
+                f"SORTED BY (crawl_id, url_norm) "
+                f"INTO {spec['n_buckets']} BUCKETS "
+                f"LOCATION '{d}'"
+            )
+            compacted = spark.table(tbl)
             start = base + 1
-        delta_paths += [
+        delta_paths = [
             self.table_path(k, "admitted")
             for k in range(start, upto_batch + 1)
             if os.path.isdir(self.table_path(k, "admitted"))

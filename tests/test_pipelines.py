@@ -74,6 +74,16 @@ def test_simhash_near_dup_radius(spark, docs):
     assert near, "planted near-dups should differ in >0 bits yet collide"
 
 
+def test_simhash_rejects_lane_overflow(spark):
+    """The lane-packed bit votes hold each per-bit count in 21 bits, which
+    is exact only below 2^21 tokens per document: a document of 2^21
+    tokens must fail with that reason instead of returning a signature."""
+    text = " ".join(f"t{i % 16}" for i in range(1 << 21))
+    big = spark.createDataFrame([(0, text)], "doc_id long, text string")
+    with pytest.raises(Exception, match=r"2\^21 or more tokens"):
+        dedup.simhash_signatures(big).collect()
+
+
 def test_embedding_band_join_sheds_vectors(spark):
     """VERDICT r2 #7: the banded self-join must exchange only
     (id, band_id, sig) — no Exchange in the near-dup plan may carry BOTH

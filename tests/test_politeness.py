@@ -56,13 +56,11 @@ def test_budget_cap(spark):
     assert sorted(r.seq_in_batch for r in got) == [1, 2, 3, 4]
 
 
-def test_big_batch_has_no_per_crawl_window(spark):
-    """VERDICT r2 #1: above seq_singlepart_threshold the scheduled plan
-    must contain NO window partitioned by crawl_id alone (the ONE active
-    crawl of the north-rule shape would serialize the whole batch through
-    one task) — seq_in_batch comes from the two-phase range-sort stamp.
-    The small path keeps the per-crawl window (bounded by the threshold);
-    both paths must return identical rows."""
+def test_one_crawl_exchange_at_any_threshold(spark):
+    """The (crawl_id, host) quota window and the per-crawl seq_in_batch
+    window share ONE hash(crawl_id) exchange whatever the thresholds say
+    (a second crawl_id-led exchange would re-shuffle the batch), and the
+    salted phase 1 returns exactly the unsalted rows."""
     import re
 
     rows = []
@@ -74,27 +72,23 @@ def test_big_batch_has_no_per_crawl_window(spark):
     eligible = _frontier(spark, rows)
     budgets = spark.createDataFrame([("c1", 11)], "crawl_id string, remaining int")
 
-    def crawl_window_second_args(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return re.findall(r"windowspecdefinition\(crawl_id#\d+[^,]*, (\w+)#", plan)
+    def hash_keys(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [
+            re.sub(r"#\d+L?", "", k)
+            for k in re.findall(r"Exchange hashpartitioning\((.*?), \d+\)", plan)
+        ]
 
-    small = select_fetch_batch(
-        eligible, budgets, CrawlPolicy(quota_per_host=3), n_eligible=len(rows)
-    )
-    # sanity: the regex sees the small path's per-crawl window (ordered by
-    # depth right after the partition key)
-    assert "depth" in crawl_window_second_args(small)
-
-    big = select_fetch_batch(
-        eligible,
-        budgets,
-        CrawlPolicy(quota_per_host=3, seq_singlepart_threshold=0, salt_threshold=0),
-        n_eligible=len(rows),
-    )
-    # every remaining crawl_id-led window must also partition by host
-    assert all(a == "host" for a in crawl_window_second_args(big))
-    key = lambda r: (r.host, r.discovery_seq, r.seq_in_batch)  # noqa: E731
-    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
+    got = []
+    for salt, seq in ((2_000_000, 20_000), (0, 20_000), (2_000_000, 0), (0, 0)):
+        pol = CrawlPolicy(quota_per_host=3, salt_threshold=salt, seq_singlepart_threshold=seq)
+        df = select_fetch_batch(eligible, budgets, pol, n_eligible=len(rows))
+        keys = hash_keys(df)
+        assert keys.count("crawl_id") == 1, keys
+        assert ("crawl_id, host, _salt" in keys) == (salt == 0), keys
+        got.append(sorted((r.host, r.discovery_seq, r.seq_in_batch) for r in df.collect()))
+    assert len(got[0]) == 11
+    assert all(g == got[0] for g in got)
 
 
 def test_salting_never_splits_quota_wrongly(spark):

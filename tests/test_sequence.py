@@ -41,3 +41,17 @@ def test_sequence_empty(spark):
     df = spark.range(0).select(F.col("id").alias("k"))
     out, n = with_sequence(df, ["k"], seq_col="seq")
     assert out.count() == 0 and n == 0
+
+
+def test_sequence_mixed_type_order_key(spark):
+    """The driver keys the offsets table by Row values and each stamping
+    task by its own numpy scalars: int, double and string key columns must
+    serialize to the same key on both sides — also in a frame without a
+    string column, where a whole-row read would upcast the int."""
+    rows = [(i % 7, (i * 13 % 11) / 4, f"s{i:03d}") for i in range(300)]
+    df = spark.createDataFrame(rows, "a int, b double, s string")
+    for frame, key in ((df, ["b", "s", "a"]), (df.select("a", "b").distinct(), ["a", "b"])):
+        out, n = with_sequence(frame, key, start=3, seq_col="seq")
+        got = sorted((tuple(r[c] for c in key), r.seq) for r in out.collect())
+        assert n == frame.count() > 1
+        assert [s for _, s in got] == list(range(3, 3 + n))

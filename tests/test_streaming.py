@@ -115,27 +115,42 @@ def test_stream_crawl_failure_raises_then_resumes(spark, tmp_path):
 
 
 def test_stream_crawl_reads_no_state_from_disk(spark, tmp_path, monkeypatch):
-    """One loop stays open across ticks: a fresh stream of several ticks
-    never reads the frontier or the seen set back from disk (the seen-set
-    compaction, which rewrites it by design, is switched off here) and
-    still equals the oracle. Every tick commits its batch, even under a
-    sparse checkpoint_every."""
+    """One loop stays open across ticks: under the default policy a fresh
+    stream never reads the frontier or the seen set back from disk, apart
+    from the periodic seen-set compaction, which rewrites it by design and
+    does not run at batch 0. It still equals the oracle. Every tick
+    commits its batch, even under a sparse checkpoint_every."""
     import os
 
     from crawler_distributed_spark.storage import BatchStore
 
-    reads = []
+    reads, compacting, compacted = [], [], []
     for name in ("read_frontier", "read_seen"):
         real = getattr(BatchStore, name)
-        monkeypatch.setattr(
-            BatchStore, name,
-            lambda self, *a, _n=name, _f=real, **k: reads.append(_n) or _f(self, *a, **k),
-        )
-    pol = CrawlPolicy(compact_seen_every=0, checkpoint_every=3)
+
+        def read(self, *a, _n=name, _f=real, **k):
+            if not compacting:
+                reads.append(_n)
+            return _f(self, *a, **k)
+
+        monkeypatch.setattr(BatchStore, name, read)
+    real_compact = BatchStore.compact_seen
+
+    def compact(self, spark_, upto, **k):
+        compacting.append(upto)
+        try:
+            return real_compact(self, spark_, upto, **k)
+        finally:
+            compacted.append(compacting.pop())
+
+    monkeypatch.setattr(BatchStore, "compact_seen", compact)
+    pol = CrawlPolicy(checkpoint_every=3)
     robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
     res = stream_crawl(spark, CFG, SEEDS, robots, str(tmp_path / "ck"), pol)
     assert len(res.batch_seconds) >= 3
     assert reads == []
+    # the stream runs past a compaction point, so the exemption is used
+    assert compacted and all(b > 0 and b % pol.compact_seen_every == 0 for b in compacted)
     monkeypatch.undo()
     _assert_oracle_equal(spark, res)
     batches = {r.batch_id for r in res.trace(spark).select("batch_id").collect()}

@@ -110,17 +110,27 @@ def test_f6_nonhtml_accepted_pages_counted(oracle_result):
     assert nonhtml, "corpus should fetch at least one non-html accepted page"
 
 
-def test_compaction_and_resume_across_it(spark, tmp_path, oracle_result):
+def test_compaction_and_resume_across_it(spark, tmp_path, oracle_result, monkeypatch):
     """Aggressive seen-set compaction (every 2 batches) + a kill/resume
     straddling a compaction point must still produce the exact oracle
-    trace and seen set — compaction is a pure read-layout change."""
+    trace and seen set — compaction is a pure read-layout change. No copy
+    is made at batch 0, where the seen set is the seeds plus one delta."""
     import os
 
+    from crawler_distributed_spark.storage import BatchStore
+
+    compacted_upto = []
+    real = BatchStore.compact_seen
+    monkeypatch.setattr(
+        BatchStore, "compact_seen",
+        lambda self, spark, upto, **k: compacted_upto.append(upto) or real(self, spark, upto, **k),
+    )
     policy = CrawlPolicy(compact_seen_every=2)
     d = str(tmp_path / "ck")
     robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
     run_crawl(spark, CFG, SEEDS, robots, d, policy, stop_after_batch=3)
     res = run_crawl(spark, CFG, SEEDS, robots, d, policy, resume=True)
+    assert compacted_upto and 0 not in compacted_upto
     # a compacted copy exists and is actually the one being read
     comp = res.store.compacted_dir()
     assert os.path.isdir(comp) and any(
@@ -287,30 +297,51 @@ def test_final_frontier_state_and_health(spark, tmp_path):
             assert h.status == "waiting"
 
 
-def test_per_crawl_batch_budget(spark, tmp_path):
+@pytest.mark.parametrize("seq_threshold", [20_000, 0])
+def test_per_crawl_batch_budget(spark, tmp_path, seq_threshold):
     """Q6 CLOSESPIDER_TIMEOUT analog (settings.py:75-76), deterministic:
     one crawl carries max_batches=2 and must stop scheduling AND admitting
     from batch 2 on while the others run to completion — engine ≡ oracle
-    on trace and seen set, and the cap actually cut the crawl short."""
-    seeds = [dict(s) for s in SEEDS]
+    on trace and seen set, and the cap actually cut the crawl short.
+
+    The capped crawl admits at batch 1 and is purged right after, so its
+    rows are stamped but never reach the frontier: later batches must
+    hand out seqs past them, not reuse ones live rows hold, because
+    discovery_seq is the frontier's row key (the fetched anti-join, the
+    journal and read_frontier's replay all merge rows by it). Run under
+    both stamps (window; two-phase with_sequence at threshold 0), killed
+    after batch 2 and resumed; every seq ever journalled names one URL.
+    (At max_pages=8 the later batches admit too little to reach a reused
+    seq; 16 does.)"""
+    import glob
+    import os
+
+    seeds = [dict(s) for s in synth.seed_rows(CFG, max_pages=16)]
     seeds[0]["max_batches"] = 2
     d = str(tmp_path / "cap_ck")
     robots = spark.createDataFrame(synth.robots_rule_rows(CFG))
-    eng = run_crawl(spark, CFG, seeds, robots, d, POLICY)
+    pol = CrawlPolicy(seq_singlepart_threshold=seq_threshold)
+    partial = run_crawl(spark, CFG, seeds, robots, d, pol, stop_after_batch=2)
+    assert partial.last_batch == 2
+    eng = run_crawl(spark, CFG, seeds, robots, d, pol, resume=True)
     orc = run_oracle(CFG, seeds, POLICY)
-    assert _engine_trace(spark, eng) == sorted(
-        orc.trace, key=lambda t: (t[1], t[0], t[2])
-    )
-    seen = {}
-    for r in eng.seen(spark).collect():
-        seen.setdefault(r.crawl_id, set()).add(r.url_norm)
-    assert seen == orc.seen
+    _assert_oracle_equal(spark, eng, orc)
     cid = seeds[0]["crawl_id"]
+    # the purge case: the capped crawl admitted rows in its last batch
+    assert eng.seen(spark).where(f"crawl_id = '{cid}' AND first_seen_batch = 1").count()
     capped = [t for t in orc.trace if t[0] == cid]
     assert capped and max(t[1] for t in capped) < 2, "no fetch at/after the cap"
     # the cap was load-bearing: the uncapped run fetches strictly more
-    base = run_oracle(CFG, SEEDS, POLICY)
+    base = run_oracle(CFG, synth.seed_rows(CFG, max_pages=16), POLICY)
     assert len([t for t in base.trace if t[0] == cid]) > len(capped)
+    cols = ["discovery_seq", "crawl_id", "url_norm"]
+    snaps = glob.glob(os.path.join(d, "batches", "*", "frontier"))
+    deltas = glob.glob(os.path.join(d, "batches", "*", "frontier_delta"))
+    rows = spark.read.parquet(*snaps).select(*cols).unionByName(
+        spark.read.parquet(*deltas).where("_op = 'add'").select(*cols)
+    )
+    shared = rows.distinct().groupBy("discovery_seq").count().where("count > 1")
+    assert not shared.collect(), "a seq names more than one URL"
 
 
 def test_dirty_checkpoint_refused(spark, tmp_path):
